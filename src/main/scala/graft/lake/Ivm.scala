@@ -192,11 +192,14 @@ object Ivm {
     * delta partitions for the same batch ids the main feed has. */
   private def deltaRows(table: LakeTable, m: Meta, cur: LakeTable.Snapshot,
       grp: String, sumCol: String, keyLookupMax: Int): (DataFrame, () => Unit) = {
-    val feedIds = table.readChanges(m.batchId) // raises the curated no-changelog error
-    if (table.deltaFeedCovers(m.batchId)) {
+    // every feed read is fenced at the pinned `cur`: a batch committed
+    // mid-sync is past the watermark this sync publishes, so it must
+    // wait for the next sync, not be counted now and again then
+    val feedIds = table.readChanges(m.batchId, cur.batchId) // raises the curated no-changelog error
+    if (table.deltaFeedCovers(m.batchId, cur.batchId)) {
       // ---- FAST PATH: one aggregation of the signed feed rows; ZERO
       //      table reads. `sign` IS the contribution sign.
-      (table.readDeltaChanges(m.batchId)
+      (table.readDeltaChanges(m.batchId, cur.batchId)
         .select(col(grp), col("sign").cast("long").as("s"),
           expr(sumCol).cast("long").as("v")), () => ())
     } else {

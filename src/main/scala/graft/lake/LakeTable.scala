@@ -543,7 +543,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * of the reference's `otsstreamreader`: a downstream job can tail
     * THIS table's changes the way this engine tails its upstream log).
     * Returns the canonical per-key changes of every batch in
-    * `(sinceBatchId, current.batchId]`: one row per (batch_id, doc_id)
+    * `(sinceBatchId, untilBatchId]`: one row per (batch_id, doc_id)
     * with op I/U/D, lsn, and the payload columns — exactly what
     * [[graft.apply.BatchApply]] merged, so replaying these changes into
     * a second table reproduces the first's state.
@@ -556,10 +556,13 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * the snapshot commit and PUBLISHED with one atomic rename after it
     * (fenced retries re-run the rename — see [[graft.apply.BatchApply
     * .publishChangelog]]), so a visible partition only ever holds a
-    * committed batch's complete changes; the `batch_id <=
-    * current.batchId` fence here is defense in depth against foreign
-    * files dropped into the directory. */
-  def readChanges(sinceBatchId: Long = -1L): DataFrame = {
+    * committed batch's complete changes. `untilBatchId` is the upper
+    * fence: a consumer pins it from the snapshot it reads against, so
+    * a batch committed while it reads is left to its next read; the
+    * default, the current batch, also keeps out foreign files dropped
+    * into the directory. */
+  def readChanges(sinceBatchId: Long = -1L,
+      untilBatchId: Long = current.batchId): DataFrame = {
     val dir = new Path(root, ChangelogDir)
     require(fs.exists(dir),
       s"no changelog under $root — replay with changelog=true to enable the change feed")
@@ -592,11 +595,11 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val all = (rangedDf.toSeq ++ parts.toSeq).reduceOption(_ unionByName _)
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LakeTable.changeFeedSchema))
-    all.filter(col("batch_id") > sinceBatchId && col("batch_id") <= current.batchId)
+    all.filter(col("batch_id") > sinceBatchId && col("batch_id") <= untilBatchId)
   }
 
   /** PRE-IMAGE DELTA READ — signed state-change rows of every batch in
-    * `(sinceBatchId, current.batchId]` (see [[LakeTable.DeltaFeedDir]]).
+    * `(sinceBatchId, untilBatchId]` (see [[LakeTable.DeltaFeedDir]]).
     * The telescoping property that makes this the zero-table-read IVM
     * input: summing a batch's signed rows gives exactly (state after
     * batch) − (state before batch), so summing the range gives the
@@ -606,7 +609,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * [[readChanges]]. Check [[deltaFeedCovers]] before relying on it:
     * the feed is opt-in per batch, and a range with holes must fall
     * back to the snapshot-diff path. */
-  def readDeltaChanges(sinceBatchId: Long = -1L): DataFrame = {
+  def readDeltaChanges(sinceBatchId: Long = -1L,
+      untilBatchId: Long = current.batchId): DataFrame = {
     val dir = new Path(root, LakeTable.DeltaFeedDir)
     val cols = LakeTable.deltaFeedSchema.fieldNames.map(col).toIndexedSeq
     val empty = spark.createDataFrame(
@@ -619,7 +623,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     spark.read.schema(LakeTable.deltaFeedSchema)
       .option("basePath", dir.toString).parquet(dir.toString)
       .select(cols: _*)
-      .filter(col("batch_id") > sinceBatchId && col("batch_id") <= current.batchId)
+      .filter(col("batch_id") > sinceBatchId && col("batch_id") <= untilBatchId)
   }
 
   /** Published batch ids under a feed dir (driver listing, O(dirs)). */
@@ -632,17 +636,17 @@ class LakeTable(val spark: SparkSession, val root: String) {
   }
 
   /** Does the pre-image delta feed cover every applied batch in
-    * `(sinceBatchId, current.batchId]`? True when the delta feed has a
+    * `(sinceBatchId, untilBatchId]`? True when the delta feed has a
     * partition for exactly the batches the MAIN feed has in range (the
     * main feed writes one partition per applied batch whenever the
     * changelog is on — which [[graft.lake.Ivm]] requires anyway) and
     * none of the range is buried in a compacted ranged store (whose
     * per-batch dirs are gone — enumeration would be O(rows)). */
-  def deltaFeedCovers(sinceBatchId: Long): Boolean = {
+  def deltaFeedCovers(sinceBatchId: Long,
+      untilBatchId: Long = current.batchId): Boolean = {
     val coveredHi = rangedFeedDirs().lastOption.map(_._2).getOrElse(-1L)
     if (coveredHi > sinceBatchId) return false
-    val hi = current.batchId
-    val inRange = (b: Long) => b > sinceBatchId && b <= hi
+    val inRange = (b: Long) => b > sinceBatchId && b <= untilBatchId
     val main = feedBatchIds(ChangelogDir).filter(inRange)
     val delta = feedBatchIds(LakeTable.DeltaFeedDir).filter(inRange)
     main == delta

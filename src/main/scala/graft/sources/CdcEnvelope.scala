@@ -138,40 +138,46 @@ object CdcEnvelope {
 
   /** Export a table's change feed as FULL Debezium envelopes — real
     * `before` blocks, not the key-only minimum [[toEnvelope]] emits:
-    * the feed's canonical rows supply `after`/op/lsn/shard, and the
-    * pre-image delta feed ([[graft.lake.LakeTable.readDeltaChanges]],
-    * `writer.preimages`) supplies each key's replaced row as `before`
-    * — exactly what a downstream IVM-style consumer needs to maintain
-    * state without reading this table. One equi-join on
-    * (batch_id, doc_id); both sides are batch-id-pruned.
+    * the feed's canonical rows supply op/lsn/shard, and the pre-image
+    * delta feed ([[graft.lake.LakeTable.readDeltaChanges]],
+    * `writer.preimages`) supplies both images — each key's replaced
+    * row (`sign = -1`) as `before` and the row the merge installed
+    * (`sign = +1`) as `after` — exactly what a downstream IVM-style
+    * consumer needs to maintain state without reading this table. Both
+    * feeds are batch-id-pruned and fenced at the same pinned batch.
     *
-    * `before` is null for inserts (nothing replaced) AND for changes
-    * that LOST the lsn merge (they changed nothing — the delta feed
-    * correctly emits no rows for them; the main feed still records
-    * the event, so the envelope goes out with op intact and no
-    * images). Requires pre-image coverage of the range — fails
-    * loudly otherwise rather than exporting silently-keyless deletes. */
+    * `before` is null for inserts (nothing replaced). A change that
+    * LOST the lsn merge changed nothing, so the delta feed holds no
+    * row for it: its envelope goes out with op intact and NO images,
+    * never the stale payload as `after`. Requires pre-image coverage
+    * of the range — fails loudly otherwise rather than exporting
+    * silently-keyless deletes. */
   def exportEnvelopes(tbl: graft.lake.LakeTable, sinceBatchId: Long,
       table: String = "docs"): DataFrame = {
-    require(tbl.deltaFeedCovers(sinceBatchId),
+    val hi = tbl.current.batchId
+    require(tbl.deltaFeedCovers(sinceBatchId, hi),
       s"full-preimage export needs writer.preimages over batches > $sinceBatchId — " +
         "replay with preimages=true (or use toEnvelope for the key-only minimum)")
-    val changes = tbl.readChanges(sinceBatchId)
-    val pre = tbl.readDeltaChanges(sinceBatchId)
-      .filter(col("sign") === -1)
-      .select(col("batch_id"), col("doc_id"),
-        struct(col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("lang"))
-          .cast(payloadSchema).as("before"))
-    val row = struct(col("doc_id"), col("tokens"), col("n_tok"), col("source"),
-      col("lang")).cast(payloadSchema)
-    val nul = lit(null).cast(payloadSchema)
+    // the delta feed keyed by (batch_id, doc_id, sign) and probed twice
+    // per change. The key is one struct so the sign stays a join key
+    // rather than a filter pushed into each side: both probes then read
+    // the same keyed side, and Spark scans and broadcasts it once.
+    val images = tbl.readDeltaChanges(sinceBatchId, hi).select(
+      struct(col("batch_id"), col("doc_id"), col("sign")).as("k"),
+      struct(col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("lang"))
+        .cast(payloadSchema).as("img"))
+    val changes = tbl.readChanges(sinceBatchId, hi)
+    def probe(side: String, sign: Int): Column = col(s"$side.k") ===
+      struct(changes("batch_id"), changes("doc_id"), lit(sign).as("sign"))
     val payload = struct(
-      col("before"),
-      when(col("op") =!= "D", row).otherwise(nul).as("after"),
+      col("pre.img").as("before"),
+      col("post.img").as("after"),
       when(col("op") === "I", "c").when(col("op") === "U", "u").otherwise("d").as("op"),
       (col("lsn") * 1000L).as("ts_ms"),
       struct(col("lsn"), col("shard"), lit(table).as("table")).as("source"))
-    changes.join(pre, Seq("batch_id", "doc_id"), "left_outer")
+    changes
+      .join(images.as("pre"), probe("pre", -1), "left_outer")
+      .join(images.as("post"), probe("post", 1), "left_outer")
       .select(to_json(struct(payload.as("payload")),
         Map("ignoreNullFields" -> "false")).as("value"))
   }

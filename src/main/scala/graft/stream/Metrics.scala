@@ -1,6 +1,6 @@
 package graft.stream
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -69,15 +69,12 @@ final class ReplayMetrics {
   * streaming progress events (the read-side tap DataX takes at the
   * channel, `Channel.statPush`). */
 final class ReplayListener(metrics: ReplayMetrics) extends StreamingQueryListener {
-  private val lastProgress = new AtomicReference[String]("")
-
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
     metrics.startNanos.set(System.nanoTime())
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     metrics.sourceRows.addAndGet(e.progress.numInputRows)
     metrics.endNanos.set(System.nanoTime())
-    lastProgress.set(e.progress.prettyJson)
   }
 
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =

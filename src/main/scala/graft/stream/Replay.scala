@@ -3,7 +3,7 @@ package graft.stream
 import graft.apply.BatchApply
 import graft.lake.LakeTable
 import graft.model.ChangeLog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SessionBridge, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
 
@@ -35,6 +35,19 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructFie
  * paces the foreachBatch loop so the cumulative applied rate never
  * exceeds the cap (the tps side — DataX sleeps its channel the same way,
  * `Channel.statPush` flow-control interval).
+ *
+ * Session: every `replay` starts a new query, and Spark runs a query's
+ * micro-batches in a clone of the caller's session, with a session UUID
+ * of its own. Spark caches compiled whole-stage-codegen classes under
+ * (thread context class loader, source), and with artifact isolation
+ * (the default) the executor keeps one class loader per session UUID,
+ * so a clone per run would miss that cache and compile and JIT every
+ * class again on each resume. The foreachBatch body therefore moves the
+ * batch frame onto the caller's session (zero-copy, the same plan) before
+ * any stage sees it: every frame derived from it, and every job it runs,
+ * belongs to the caller's session, whose loader stays the same from one
+ * run to the next. Those jobs also run under the caller's SQL conf,
+ * adaptive execution included (a streaming clone turns it off).
  */
 object Replay {
 
@@ -149,7 +162,10 @@ object Replay {
       .queryName("graft-replay")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (raw: DataFrame, batchId: Long) =>
+      .foreachBatch { (streamed: DataFrame, batchId: Long) =>
+        // run the batch in the caller's session, not the query's clone
+        // (see the class doc: compiled classes are reused across runs)
+        val raw = SessionBridge.onSession(streamed, spark)
         // dirty routing AND its metrics sit BEHIND the batch-id fence: a
         // foreachBatch retry of an already-committed batch (crash between
         // lake commit and checkpoint — exactly what stopAfterBatches

@@ -105,6 +105,37 @@ class CdcEngineSpec extends AnyFunSuite {
     assert(mismatches.isEmpty, mismatches.mkString("; "))
   }
 
+  test("replay runs batches in the caller's session and reuses compiled classes across runs") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = tmpDir("graft-codegen-reuse")
+    // three small segments; lang from the first event, so the schema
+    // evolves in run 1 and runs 2 and 3 plan the same shapes
+    ChangeLogGen.write(spark, cfg.copy(nEvents = 6000, nSegments = 3, evolveAtLsn = 0),
+      s"$dir/all")
+    val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new Path(s"$dir/log"))
+    val sessions = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.SparkSession]
+    def run(seg: Int): Long = {
+      fs.listStatus(new Path(s"$dir/all")).map(_.getPath)
+        .filter(_.getName.startsWith(f"seg-$seg%05d-"))
+        .foreach(p => fs.rename(p, new Path(s"$dir/log", p.getName)))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Replay.replay(spark, s"$dir/log", s"$dir/table", s"$dir/cp", nBuckets = 8,
+        transform = { df => sessions += df.sparkSession; df })
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    run(0)
+    run(1)
+    val third = run(2)
+    assert(sessions.size == 3 && sessions.forall(_ eq spark))
+    assert(third == 0, s"third replay compiled $third classes")
+    val log = spark.read.schema(graft.model.ChangeLog.schema).parquet(s"$dir/log")
+    val mismatches = Oracle.diff(Oracle.expectedState(spark, log), LakeTable.load(spark,
+      s"$dir/table").read())
+    assert(mismatches.isEmpty, mismatches.mkString("; "))
+  }
+
   test("partition checksums match between engine state and oracle") {
     val log = ChangeLogGen.events(spark, cfg.copy(nEvents = 5000)).cache()
     val dir = tmpDir("graft-cksum")

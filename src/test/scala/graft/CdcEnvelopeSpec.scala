@@ -174,6 +174,35 @@ class CdcEnvelopeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("preimages"))
   }
 
+  test("exportEnvelopes: a change that lost the lsn merge carries no image") {
+    import graft.apply.BatchApply
+    import spark.implicits._
+    val dir = tmpDir("graft-env-stale")
+    val table = Replay.createTable(spark, s"$dir/t", nBuckets = 4)
+    def batch(rows: (String, Long, String, Seq[Int], Long)*) =
+      rows.map { case (d, l, op, tk, nt) => (d, l, op, tk, nt, "s0",
+        null.asInstanceOf[String], 0) }
+        .toDF("doc_id", "lsn", "op", "tokens", "n_tok", "source", "lang", "shard")
+    BatchApply.apply(table, batch(("a", 10L, "I", Seq(1, 2, 3), 3L)),
+      batchId = 0, changelog = true, preimages = true)
+    BatchApply.apply(table, batch(
+        ("a", 5L, "U", Seq(9, 9, 9, 9), 4L),   // stale: lsn 5 < 10, loses
+        ("b", 6L, "I", Seq(4), 1L)),           // fresh insert, wins
+      batchId = 1, changelog = true, preimages = true)
+    assert(table.read().filter(col("doc_id") === "a")
+      .select(concat_ws(",", col("tokens"))).head().getString(0) == "1,2,3")
+    val got = CdcEnvelope.exportEnvelopes(table, sinceBatchId = 0)
+      .select(from_json(col("value"), CdcEnvelope.envelopeSchema).as("e"))
+      .select(col("e.payload.op"), col("e.payload.source.lsn"),
+        col("e.payload.before").isNull,
+        when(col("e.payload.after").isNotNull,
+          concat_ws(",", col("e.payload.after.tokens"))))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2),
+        Option(r.getString(3)))).toSet
+    // (op, lsn, before absent, after tokens): never "9,9,9,9"
+    assert(got == Set(("u", 5L, true, None), ("c", 6L, true, Some("4"))), s"got $got")
+  }
+
   test("replaying an envelope log equals replaying the parquet log") {
     val d = tmpDir("graft-dbz-replay")
     // parquet form

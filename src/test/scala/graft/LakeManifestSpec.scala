@@ -292,6 +292,30 @@ class LakeManifestSpec extends AnyFunSuite {
     assert(!staged.exists(), "healed staged dir must be renamed, not kept")
   }
 
+  test("feed reads honour an explicit upper batch fence") {
+    import org.apache.spark.sql.functions.col
+    val dir = tmpDir("graft-feed-fence")
+    val table = Replay.createTable(spark, s"$dir/t", nBuckets = 4)
+    val cfg = GenConfig(nEvents = 800, nDocs = 300, nShards = 4)
+    (0 until 4).foreach(b => BatchApply.apply(table,
+      ChangeLogGen.events(spark, cfg, b * 200, (b + 1) * 200), b,
+      changelog = true, preimages = true))
+    assert(table.current.batchId == 3)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.select(col("batch_id")).distinct().collect().map(_.getInt(0)).toSet
+    // (0, 2]: batch 3 is committed but past the fence, batch 0 below it
+    assert(ids(table.readChanges(0, 2)) == Set(1, 2))
+    assert(ids(table.readDeltaChanges(0, 2)) == Set(1, 2))
+    assert(table.deltaFeedCovers(0, 2))
+    // the default fence is the current batch
+    assert(ids(table.readChanges(0)) == Set(1, 2, 3))
+    // coverage is judged on the fenced range only: a batch past the
+    // fence without pre-images does not break it
+    BatchApply.apply(table, ChangeLogGen.events(spark, cfg, 800, 900), 4,
+      changelog = true)
+    assert(!table.deltaFeedCovers(0) && table.deltaFeedCovers(0, 3))
+  }
+
   test("suggestBuckets: power-of-two sizing from live rows, clamped") {
     import LakeTable.suggestBuckets
     assert(suggestBuckets(0L) == 16) // min clamp
