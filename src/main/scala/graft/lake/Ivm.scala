@@ -47,15 +47,19 @@ import org.apache.spark.sql.functions._
  *     table's own bucket-COW discipline, one level down) and the new
  *     manifest maps unchanged buckets to their existing data dirs —
  *     a high-cardinality view no longer funnels through one task.
- *   - `manifest-v<N>.json` is published CREATE-EXCLUSIVE (the
- *     [[graft.sources.KeyedSink]] / LakeTable snapshot version-CAS):
- *     two concurrent syncs race to create the same next version and
- *     exactly one wins — the loser deletes its data dir and throws
- *     LOUDLY. Readers list manifests and serve the max version; they
- *     never rename anything, so the round-4 reader/writer heal race
- *     (ADVICE r04) is gone by construction. Crash debris (a data dir
- *     whose manifest never landed) is invisible and swept by the next
- *     successful publish.
+ *   - `manifest-v<N>.json` is published with [[Commit.publish]] at
+ *     exactly one past the manifest version the sync read: concurrent
+ *     syncs race to the same version and exactly one wins — the loser
+ *     deletes its data dir and throws LOUDLY ("publish race"), so a
+ *     stale sync can never publish over state it did not read.
+ *     Readers list manifests and serve the max version; they never
+ *     rename anything. Crash debris (a data dir whose manifest never
+ *     landed) is invisible and swept by the next successful publish.
+ *   - reader window: the sweep after a publish keeps the new and the
+ *     previous manifest and their data dirs, nothing older. A reader
+ *     that resolved manifest v−2 can lose its data dirs to two fast
+ *     syncs; it should re-resolve (read the latest manifest again) on
+ *     a missing dir.
  *   - an optional [[WriterLease]] threads through like every other
  *     mutable store (entry + pre-publish checks); the CAS alone
  *     already excludes silent interleaving, the lease turns a zombie
@@ -87,8 +91,10 @@ import org.apache.spark.sql.functions._
  */
 object Ivm {
 
-  private case class Meta(version: Long, batchId: Long, nb: Int,
-      grpDdl: String, parts: Map[Int, String])
+  /** `manifestVersion` is the manifest this was read from; the next
+    * publish claims exactly `manifestVersion + 1`. */
+  private case class Meta(manifestVersion: Long, version: Long, batchId: Long,
+      nb: Int, grpDdl: String, parts: Map[Int, String])
 
   /** Changed-key count up to which the snapshot-diff fallback collects
     * the key set and takes the readKeys point-lookup path (pushed In +
@@ -270,27 +276,25 @@ object Ivm {
 
   private val ManifestRe = """manifest-v(\d+)\.json""".r
 
-  private def manifestVersions(spark: SparkSession, aggDir: String): Seq[Long] = {
-    val root = new Path(aggDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).map(_.getPath.getName).collect {
-      case ManifestRe(v) => v.toLong
-    }.toSeq.sorted
-  }
-
   private def manifestPath(aggDir: String, v: Long): Path =
     new Path(aggDir, f"manifest-v$v%08d.json")
 
+  /** The latest manifest, None for a fresh store. A round-4 store
+    * (`state/_meta.json`, no manifests) fails loudly instead of being
+    * silently re-initialised over its leftover `state/` dir. */
   private def readMeta(spark: SparkSession, aggDir: String): Option[Meta] = {
-    val vs = manifestVersions(spark, aggDir)
-    if (vs.isEmpty) return None
     val fs = new Path(aggDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(manifestPath(aggDir, vs.max))
+    val mv = Commit.versions(fs, new Path(aggDir), ManifestRe).lastOption.getOrElse {
+      if (fs.exists(new Path(aggDir, "state/_meta.json")))
+        throw new IllegalStateException(s"$aggDir holds a legacy IVM store (state/_meta.json, " +
+          "no manifest) that this build does not read: drop the directory and re-init with sync")
+      return None
+    }
+    val in = fs.open(manifestPath(aggDir, mv))
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     val j = org.json4s.jackson.JsonMethods.parse(txt)
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    Some(Meta(
+    Some(Meta(mv,
       (j \ "version").extract[Long],
       (j \ "batchId").extract[Long],
       (j \ "nb").extract[Int],
@@ -335,29 +339,32 @@ object Ivm {
       val f = rows.schema.fields.find(_.name == grp).get
       s"`${f.name}` ${f.dataType.sql}"
     }
-    rows.withColumn("pb", pbCol(col(grp), nb))
-      .repartition(col("pb"))
-      .write.partitionBy("pb").parquet(s"$aggDir/$dirName")
-    // which buckets actually hold rows now (a changed bucket whose
-    // groups all went extinct writes no dir and leaves the manifest)
-    val written = fs.listStatus(new Path(aggDir, dirName))
-      .map(_.getPath.getName).filter(_.startsWith("pb="))
-      .map(_.stripPrefix("pb=").toInt).toSet
-    val parts = prev match {
-      case None => written.map(_ -> dirName).toMap
-      case Some(p) =>
-        (p.parts -- changedPbs.getOrElse(Set.empty)) ++ written.map(_ -> dirName).toMap
-    }
-    WriterLease.guard(spark, aggDir, lease) // pre-publish fence re-check
-    val nextV = manifestVersions(spark, aggDir).lastOption.getOrElse(0L) + 1L
-    val body = manifestJson(version, batchId, nb, grpDdl, parts)
-    try casWrite(spark, aggDir, nextV, body)
-    catch { case e: IllegalStateException =>
-      // CAS loss: the unreferenced data dir would leak — reclaim it
+    val nextV = prev.fold(0L)(_.manifestVersion) + 1L
+    val parts = try {
+      rows.withColumn("pb", pbCol(col(grp), nb))
+        .repartition(col("pb"))
+        .write.partitionBy("pb").parquet(s"$aggDir/$dirName")
+      // which buckets actually hold rows now (a changed bucket whose
+      // groups all went extinct writes no dir and leaves the manifest)
+      val written = fs.listStatus(new Path(aggDir, dirName))
+        .map(_.getPath.getName).filter(_.startsWith("pb="))
+        .map(_.stripPrefix("pb=").toInt).toSet
+      val parts = prev match {
+        case None => written.map(_ -> dirName).toMap
+        case Some(p) =>
+          (p.parts -- changedPbs.getOrElse(Set.empty)) ++ written.map(_ -> dirName).toMap
+      }
+      WriterLease.guard(spark, aggDir, lease) // pre-publish fence re-check
+      casWrite(spark, aggDir, nextV, manifestJson(version, batchId, nb, grpDdl, parts))
+      parts
+    } catch { case e: Exception if fs.exists(manifestPath(aggDir, nextV)) =>
+      // lost the race to nextV — at the CAS, or before it when the
+      // winner's sweep removed this sync's half-written data dir:
+      // reclaim the dir (it would leak) and report the race
       fs.delete(new Path(aggDir, dirName), true)
-      throw e
+      throw publishRace(aggDir, nextV, e)
     }
-    sweep(fs, aggDir, nextV, parts.values.toSet)
+    sweep(fs, aggDir, nextV, (parts.values ++ prev.toSeq.flatMap(_.parts.values)).toSet)
   }
 
   /** Metadata-only advance: same CAS, previous parts carried over. */
@@ -365,7 +372,7 @@ object Ivm {
       version: Long, batchId: Long, lease: Option[WriterLease]): Unit = {
     val fs = new Path(aggDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     WriterLease.guard(spark, aggDir, lease)
-    val nextV = manifestVersions(spark, aggDir).lastOption.getOrElse(0L) + 1L
+    val nextV = m.manifestVersion + 1L
     casWrite(spark, aggDir, nextV, manifestJson(version, batchId, m.nb, m.grpDdl, m.parts))
     sweep(fs, aggDir, nextV, m.parts.values.toSet)
   }
@@ -379,41 +386,27 @@ object Ivm {
         ("parts" -> parts.map { case (k, v) => k.toString -> v })))
   }
 
-  /** The version-CAS arm: create-exclusive on the next manifest — two
-    * publishers racing to the same version produce exactly one winner;
-    * the loser throws LOUDLY and never clobbers (spec-driven, the
-    * [[graft.lake.LakeTable.writeSnapshot]] discipline). */
+  /** The version-CAS: publish manifest `v` exclusively — of any number
+    * of publishers racing to `v` exactly one wins; the losers throw
+    * LOUDLY and never clobber. */
   private[graft] def casWrite(spark: SparkSession, aggDir: String, v: Long,
       body: String): Unit = {
     val fs = new Path(aggDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = try fs.create(manifestPath(aggDir, v), false) catch {
-      case e: java.io.IOException =>
-        throw new IllegalStateException(
-          s"ivm publish race on $aggDir v$v (concurrent sync advanced the store)", e)
-    }
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    if (!Commit.publish(fs, manifestPath(aggDir, v), body.getBytes("UTF-8")))
+      throw publishRace(aggDir, v, null)
   }
+
+  private def publishRace(aggDir: String, v: Long, cause: Throwable) = new IllegalStateException(
+    s"ivm publish race on $aggDir v$v (concurrent sync advanced the store)", cause)
 
   /** After a successful publish of `keepV`: drop manifests older than
     * the previous one (kept for a reader that resolved it just before
-    * the CAS) and data dirs referenced by neither of the two retained
-    * manifests — crash debris and superseded bucket versions. */
+    * the CAS) and data dirs not in `keep`, the dirs of both retained
+    * manifests (the publisher read the previous one: it CASed at
+    * exactly its version + 1) — crash debris and superseded buckets. */
   private def sweep(fs: org.apache.hadoop.fs.FileSystem, aggDir: String,
-      keepV: Long, liveDirs: Set[String]): Unit = {
-    val root = new Path(aggDir)
-    val prevParts: Set[String] = {
-      val p = manifestPath(aggDir, keepV - 1)
-      if (keepV <= 1 || !fs.exists(p)) Set.empty
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-        (org.json4s.jackson.JsonMethods.parse(txt) \ "parts")
-          .extract[Map[String, String]].values.toSet
-      }
-    }
-    val keep = liveDirs ++ prevParts
-    fs.listStatus(root).foreach { st =>
+      keepV: Long, keep: Set[String]): Unit =
+    fs.listStatus(new Path(aggDir)).foreach { st =>
       val n = st.getPath.getName
       n match {
         case ManifestRe(v) if v.toLong < keepV - 1 => fs.delete(st.getPath, false)
@@ -421,5 +414,4 @@ object Ivm {
         case _ => ()
       }
     }
-  }
 }

@@ -36,15 +36,15 @@ import org.json4s.jackson.JsonMethods
  * ONE consolidated manifest — amortized O(table files /
  * CompactManifestsAt) per commit, and the descriptor stays bounded.
  *
- * Commit protocol = write-temp-then-rename, the same two-phase pattern
- * the reference uses for atomic file output (DataX
- * `hdfswriter/.../HdfsWriter.java:193-194` + `HdfsHelper.renameFile:207-233`:
- * tasks write `path__<uuid>` temp files, job post() renames). Here the
- * *snapshot descriptor* rename is the commit point: readers discover the
- * table state by listing `snapshots/` and taking the max version, so a
- * crash mid-commit leaves only ignored `.tmp` files and orphan data files
- * (cleaned by `vacuum()`); a concurrent committer loses the rename race
- * (same-name rename fails) and retries against the new state.
+ * Commit protocol: data files and the delta manifest land under fresh
+ * names first; the commit point is publishing descriptor `v<N+1>` with
+ * [[Commit.publish]] (temp file, then one exclusive link or rename —
+ * the reference's temp-then-rename output, DataX
+ * `hdfswriter/.../HdfsWriter.java:193-194` + `HdfsHelper.renameFile:207-233`,
+ * made exclusive). Readers list `snapshots/` and take the max version,
+ * so a crash mid-commit leaves only ignored `.tmp` files and orphan data
+ * files (cleaned by `vacuum()`); of any number of committers racing to
+ * the same version exactly one wins, the rest fail loudly.
  *
  * Row-level upserts/deletes are copy-on-write at hash-bucket granularity:
  * the table is bucketed by `pmod(xxhash64(doc_id), nBuckets)`; a MERGE
@@ -333,10 +333,11 @@ object LakeTable {
     } finally reader.close()
   }
 
+  private val SnapshotRe = """v(\d+)\.json""".r
+
   def exists(spark: SparkSession, root: String): Boolean = {
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(root, "snapshots")) &&
-      fs.listStatus(new Path(root, "snapshots")).exists(_.getPath.getName.matches("v\\d+\\.json"))
+    Commit.versions(fs, new Path(root, "snapshots"), SnapshotRe).nonEmpty
   }
 }
 
@@ -350,16 +351,15 @@ class LakeTable(val spark: SparkSession, val root: String) {
   // ------------------------------------------------------------ snapshots
 
   /** Current snapshot = max committed version (readers never see partial
-    * state: the descriptor rename is the commit point). */
+    * state: the descriptor publish is the commit point). */
   def current: Snapshot = snapshotAt(currentVersion)
 
   def currentVersion: Long = listVersions.max
 
   def listVersions: Seq[Long] = {
-    val vs = fs.listStatus(snapDir).map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+\\.json") => n.stripPrefix("v").stripSuffix(".json").toLong }
+    val vs = Commit.versions(fs, snapDir, SnapshotRe)
     if (vs.isEmpty) throw new IllegalStateException(s"no snapshots under $root")
-    vs.toSeq.sorted
+    vs
   }
 
   /** Snapshots are immutable, so loaded ones are cached (bounded): the
@@ -401,21 +401,14 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * orphan from a lost commit race is vacuumed). */
   private def writeManifest(m: Manifest): String = {
     val rel = s"manifests/m-${UUID.randomUUID()}.json"
-    val out = fs.create(new Path(root, rel), false)
+    val out = fs.create(new Path(root, rel))
     try out.write(JsonMethods.pretty(manifestToJson(m)).getBytes("UTF-8")) finally out.close()
     rel
   }
 
-  private[lake] def writeSnapshot(s: Snapshot): Boolean = {
-    val target = new Path(snapDir, f"v${s.version}%08d.json")
-    val tmp = new Path(snapDir, s".tmp-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(JsonMethods.pretty(snapToJson(s)).getBytes("UTF-8")) finally out.close()
-    // commit point: same-directory rename; loses the race if target exists
-    val ok = !fs.exists(target) && fs.rename(tmp, target)
-    if (!ok) fs.delete(tmp, false)
-    ok
-  }
+  private[lake] def writeSnapshot(s: Snapshot): Boolean =
+    Commit.publish(fs, new Path(snapDir, f"v${s.version}%08d.json"),
+      JsonMethods.pretty(snapToJson(s)).getBytes("UTF-8"))
 
   // ---------------------------------------------------------------- read
 
@@ -776,7 +769,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * directory): visibility is governed solely by the snapshot manifest,
     * so no per-file rename pass exists at all — the reference's
     * temp+rename 2PC (`HdfsWriter.java:193-324`) collapses to the single
-    * snapshot-descriptor rename, and a crash leaves only unreferenced
+    * snapshot-descriptor publish, and a crash leaves only unreferenced
     * files that [[vacuum]] removes. Per-file (rows, lsn min/max) stats
     * come from parquet FOOTERS read ON THE EXECUTORS — one distributed
     * metadata job, never a serial driver loop over thousands of files

@@ -28,23 +28,20 @@ final case class FencedWriterException(
   * [[FencedWriterException]] instead of corrupting the store.
   *
   * Layout: `<store>/_writers/epoch=<%019d>` marker files, one per
-  * acquisition, created with create-exclusive (`FileSystem.create(p,
-  * overwrite=false)` — atomic on HDFS and object stores with
-  * conditional puts; best-effort on raw local FS, same caveat as the
-  * store-swap renames). The live epoch is the max marker. Marker files
-  * are tiny and acquisition is rare (one per writer takeover), so the
-  * dir never needs compaction; [[release]] removes the caller's own
-  * marker for tidy shutdown but correctness never depends on it.
+  * acquisition, each published with [[Commit.publish]], so racing
+  * acquirers never share an epoch. The live epoch is the max marker.
+  * Marker files are tiny and acquisition is rare (one per writer
+  * takeover), so the dir never needs compaction; [[release]] removes
+  * the caller's own marker for tidy shutdown but correctness never
+  * depends on it.
   *
-  * Guarantee (and its honest limit): a writer that checks the fence at
-  * every mutation boundary can lose ownership only BETWEEN boundaries,
-  * so the last unfenced mutation it completed was made while it still
-  * held the max epoch. Two mutations racing INSIDE one boundary window
-  * (check passes for both, both publish) are excluded by acquisition
-  * order only on filesystems with atomic create/rename — the same
-  * assumption the snapshot-commit renames already make. The fence
-  * therefore turns "two replays silently interleave appends" into
-  * "the older replay fails loudly at its next batch".
+  * Guarantee (and its limit): a writer that checks the fence at every
+  * mutation boundary can lose ownership only BETWEEN boundaries, so the
+  * last unfenced mutation it completed was made while it still held the
+  * max epoch. Two mutations racing INSIDE one boundary window (check
+  * passes for both, both publish) are not excluded by the fence; the
+  * fence turns "two replays silently interleave appends" into "the
+  * older replay fails loudly at its next batch".
   *
   * Stores that never acquired a lease stay unfenced (legacy
   * single-writer mode, zero overhead); once ANY writer acquires,
@@ -89,40 +86,23 @@ object WriterLease {
   private val Marker = """epoch=(\d+)""".r
 
   /** The store's live (max) epoch, None if the store is unfenced. */
-  def currentEpoch(spark: SparkSession, store: String): Option[Long] = {
-    val fs = fsOf(spark, store)
-    val dir = leaseDir(store)
-    if (!fs.exists(dir)) None
-    else {
-      val es = fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-        case Marker(e) => e.toLong
-      }
-      if (es.isEmpty) None else Some(es.max)
-    }
-  }
+  def currentEpoch(spark: SparkSession, store: String): Option[Long] =
+    Commit.versions(fsOf(spark, store), leaseDir(store), Marker).lastOption
 
-  /** Take ownership of `store`: claim epoch = current + 1 with a
-    * create-exclusive marker, retrying past collisions with concurrent
-    * acquirers (each retry re-reads the max, so the winner set is
-    * totally ordered). All epochs below the returned lease are fenced
-    * the moment this returns. */
+  /** Take ownership of `store`: publish the marker of epoch = current + 1,
+    * retrying past collisions with concurrent acquirers (each retry
+    * re-reads the max, so the winner set is totally ordered). All epochs
+    * below the returned lease are fenced the moment this returns. */
   def acquire(spark: SparkSession, store: String,
       writerId: String = "writer"): WriterLease = {
     val fs = fsOf(spark, store)
-    val dir = leaseDir(store)
-    fs.mkdirs(dir)
     var attempts = 0
     while (attempts < 64) {
       val next = currentEpoch(spark, store).getOrElse(0L) + 1L
-      val marker = new Path(dir, f"epoch=$next%019d")
-      try {
-        val out = fs.create(marker, false) // create-exclusive
-        out.write(writerId.getBytes("UTF-8"))
-        out.close()
+      if (Commit.publish(fs, new Path(leaseDir(store), f"epoch=$next%019d"),
+          writerId.getBytes("UTF-8")))
         return WriterLease(store, next, writerId)
-      } catch {
-        case _: java.io.IOException => attempts += 1 // lost the race, re-read max
-      }
+      attempts += 1 // lost the race, re-read max
     }
     throw new IllegalStateException(
       s"WriterLease.acquire: could not claim an epoch on $store after 64 attempts")

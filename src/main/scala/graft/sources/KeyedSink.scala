@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 import java.util.UUID
 
+import graft.lake.Commit
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -33,9 +34,10 @@ import org.apache.spark.util.SerializableConfiguration
  *     2PC half — Spark's OutputCommitCoordinator guarantees one
  *     attempt per partition wins), the driver's `commit(messages)`
  *     publishes the staged dir with ONE atomic rename and then
- *     advances the store with a create-exclusive `manifest-v<N>.json`
- *     — the same version-CAS as [[graft.lake.LakeTable]] commits: a
- *     concurrent writer loses LOUDLY, never silently interleaves.
+ *     advances the store by publishing `manifest-v<N>.json` with
+ *     [[graft.lake.Commit.publish]] — the same version-CAS as
+ *     [[graft.lake.LakeTable]] commits: a concurrent writer loses
+ *     LOUDLY, never silently interleaves.
  *     `abort()` deletes the staged dir; readers only ever see
  *     manifest-listed files, so crash debris (a staged dir whose txn
  *     never committed) is invisible and harmless.
@@ -278,7 +280,7 @@ private[sources] class KeyedBucketReader(path: String, files: Seq[String],
   override def close(): Unit = ()
 }
 
-private[sources] object KeyedSink {
+private[graft] object KeyedSink {
 
   val Schema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
@@ -313,13 +315,7 @@ private[sources] object KeyedSink {
   /** (version, files) of the max committed manifest, None if empty.
     * Files are (bucket, relPath, rows) in commit order. */
   def currentManifest(fs: FileSystem, path: String): Option[(Long, Seq[(Int, String, Long)])] = {
-    val root = new Path(path)
-    if (!fs.exists(root)) return None
-    val vs = fs.listStatus(root).map(_.getPath.getName).collect {
-      case ManifestRe(v) => v.toLong
-    }
-    if (vs.isEmpty) return None
-    val v = vs.max
+    val v = Commit.versions(fs, new Path(path), ManifestRe).lastOption.getOrElse(return None)
     val in = fs.open(new Path(path, f"manifest-v$v%08d.json"))
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     val j = org.json4s.jackson.JsonMethods.parse(txt)
@@ -329,20 +325,14 @@ private[sources] object KeyedSink {
     Some((v, files))
   }
 
-  /** Version-CAS publish: create-exclusive on the next manifest. Two
-    * committers that both read version v race to create v+1; exactly
-    * one rename/create wins, the loser throws LOUDLY here (never a
-    * silent history fork) — the LakeTable writeSnapshot discipline. */
-  private[sources] def publishManifest(fs: FileSystem, path: String,
-      version: Long, body: String): Unit = {
-    val manifest = new Path(path, f"manifest-v$version%08d.json")
-    val out = try fs.create(manifest, false) catch {
-      case e: java.io.IOException =>
-        throw new IllegalStateException(
-          s"keyed-sink commit race on v$version (concurrent writer advanced the store)", e)
-    }
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
+  /** Version-CAS publish of the next manifest. Committers that all
+    * read version v race to publish v+1; exactly one wins, the losers
+    * throw LOUDLY here (never a silent history fork). */
+  private[graft] def publishManifest(fs: FileSystem, path: String,
+      version: Long, body: String): Unit =
+    if (!Commit.publish(fs, new Path(path, f"manifest-v$version%08d.json"), body.getBytes("UTF-8")))
+      throw new IllegalStateException(
+        s"keyed-sink commit race on v$version (concurrent writer advanced the store)")
 
   def manifestJson(files: Seq[(Int, String, Long)]): String = {
     import org.json4s.JsonDSL._

@@ -1,7 +1,7 @@
 package graft
 
 import graft.apply.BatchApply
-import graft.lake.{Ivm, LakeTable}
+import graft.lake.{Commit, Ivm, LakeTable}
 import graft.model.ChangeEvent
 import graft.stream.Replay
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -269,5 +269,53 @@ class IvmSpec extends AnyFunSuite {
     intercept[IllegalStateException](Ivm.sync(table, agg))
     // the new owner syncs fine and the result is exact
     assert(served(Ivm.sync(table, agg, lease = Some(l2))) == direct(table))
+  }
+
+  private def manifestVersions(agg: String): Seq[Long] = {
+    val root = new org.apache.hadoop.fs.Path(agg)
+    Commit.versions(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      """manifest-v(\d+)\.json""".r)
+  }
+
+  test("concurrent syncs of one store: one publishes per batch, the rest lose loudly") {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    val dir = tmpDir("ivm-conc")
+    val table = Replay.createTable(spark, s"$dir/t", nBuckets = 4)
+    val agg = s"$dir/agg"
+    BatchApply.apply(table,
+      toDF((0 until 40).map(i => ev(i + 1, "I", f"c$i%04d", 2 + i % 3, s"s${i % 3}"))),
+      batchId = 0, changelog = true)
+    Ivm.sync(table, agg)
+    val pool = Executors.newFixedThreadPool(4)
+    try (1 to 2).foreach { b =>
+      BatchApply.apply(table, toDF(Seq(ev(100L * b, "U", "c0001", 9, s"s$b"),
+        ev(100L * b + 1, "I", f"n$b%04d", 4, "s0"), ev(100L * b + 2, "D", f"c00${10 + b}", 0, null))),
+        batchId = b, changelog = true)
+      val before = manifestVersions(agg).last
+      val outcomes = (1 to 4).map(_ => pool.submit(new Callable[Option[IllegalStateException]] {
+        def call(): Option[IllegalStateException] =
+          try { Ivm.sync(table, agg); None } catch { case e: IllegalStateException => Some(e) }
+      })).map(_.get(300, TimeUnit.SECONDS))
+      outcomes.flatten.foreach(e => assert(e.getMessage.contains("publish race"), e.getMessage))
+      assert(outcomes.contains(None), "some sync must return")
+      // exactly one publish per batch, at the version after the one read
+      assert(manifestVersions(agg) == Seq(before, before + 1))
+      assert(Ivm.syncedBatchId(spark, agg) == b)
+      assert(served(Ivm.readAgg(spark, agg)) == direct(table))
+    } finally pool.shutdown()
+  }
+
+  test("a round-4 store layout (state/_meta.json, no manifest) fails loudly") {
+    val dir = tmpDir("ivm-legacy")
+    val table = Replay.createTable(spark, s"$dir/t", nBuckets = 4)
+    val agg = s"$dir/agg"
+    BatchApply.apply(table, toDF(Seq(ev(1, "I", "r0001", 3, "s0"))), batchId = 0, changelog = true)
+    val meta = new org.apache.hadoop.fs.Path(s"$agg/state/_meta.json")
+    val out = meta.getFileSystem(spark.sparkContext.hadoopConfiguration).create(meta)
+    out.write("""{"version":1,"batchId":0}""".getBytes("UTF-8")); out.close()
+    val e = intercept[IllegalStateException](Ivm.sync(table, agg))
+    assert(e.getMessage.contains("drop the directory and re-init"), e.getMessage)
+    intercept[IllegalStateException](Ivm.readAgg(spark, agg))
+    assert(manifestVersions(agg).isEmpty, "a legacy store must not be re-initialised over")
   }
 }
