@@ -115,15 +115,6 @@ object BatchApply {
   private[graft] def stagedChangelog(table: LakeTable, batchId: Long): String =
     s"${table.root}/${LakeTable.ChangelogDir}/.staged-batch_id=$batchId"
 
-  /** STAGE the batch's feed partition (canonical payload rows; stats
-    * and bucket columns dropped) before the snapshot commit.
-    * Batch-scoped overwrite => a retry that re-stages is idempotent. */
-  private def stageChangelog(table: LakeTable, canonical: DataFrame, batchId: Long): Unit =
-    canonical
-      .select(col("doc_id"), col("op"), col("lsn"), col("tokens"), col("n_tok"),
-        col("source"), col("lang"), col("shard"))
-      .write.mode("overwrite").parquet(stagedChangelog(table, batchId))
-
   /** PUBLISH a staged feed partition with one atomic directory rename
     * (the same primitive as the snapshot-descriptor commit): live
     * tailers see either no partition or the complete one — never a
@@ -168,62 +159,6 @@ object BatchApply {
 
   private[graft] def stagedDeltaFeed(table: LakeTable, batchId: Long): String =
     s"${table.root}/${LakeTable.DeltaFeedDir}/.staged-batch_id=$batchId"
-
-  /** STAGE the batch's signed pre/post-image rows
-    * ([[LakeTable.deltaFeedSchema]]) before the snapshot commit. The
-    * winner decision (`c.lsn > o._lsn`) is recomputed here against the
-    * same pinned snapshot the merge reads, so the staged rows are
-    * exactly the state transition the commit installs: a change that
-    * loses the merge emits NOTHING (the main feed still records it —
-    * that is why the main feed alone cannot drive an exact downstream
-    * delta). Cost: one extra resolved read of the touched buckets
-    * semi-joined to the batch's keys — O(touched buckets), the same
-    * order as the COW merge side; opt-in via `preimages = true`.
-    * Both signed sides are computed in ONE pass over the join (a
-    * filtered explode of two optional structs, not a self-union that
-    * would run the join twice). */
-  private def stageDeltaFeed(table: LakeTable, canonical: DataFrame,
-      snap: LakeTable.Snapshot, touched: Set[Int], batchId: Long): Unit = {
-    import org.apache.spark.sql.types.{ArrayType, IntegerType}
-    val userSchema = snap.schema
-    val changeTypes = canonical.schema.fields.map(f => f.name -> f.dataType).toMap
-    val userType = userSchema.fields.map(f => f.name -> f.dataType).toMap
-    val old = table.readResolved(Some(touched), Some(snap))
-      .join(canonical.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val joined = canonical.as("c")
-      .join(old.as("o"), col("c.doc_id") === col("o.doc_id"), "left_outer")
-    val wins = col("o.doc_id").isNull || col("c.lsn") > col(s"o.${LakeTable.LsnCol}")
-    // pre-image side: the key existed LIVE before this batch and the
-    // batch's change wins the merge
-    def oc(n: String): Column =
-      if (userType.contains(n)) col(s"o.$n") else lit(null)
-    val preRow = struct(
-      col("c.doc_id").as("doc_id"), lit(-1).as("sign"),
-      col(s"o.${LakeTable.LsnCol}").as("lsn"),
-      oc("tokens").cast(ArrayType(IntegerType)).as("tokens"),
-      oc("n_tok").cast("long").as("n_tok"),
-      oc("source").cast("string").as("source"),
-      oc("lang").cast("string").as("lang"))
-    // post-image side: what the merge installs (cast to the TABLE's
-    // schema — the post row must equal the row a direct read serves)
-    def cc(n: String): Column =
-      if (userType.contains(n))
-        graft.lake.SchemaCompat.castTo(col(s"c.$n"), changeTypes(n), userType(n))
-      else lit(null)
-    val postRow = struct(
-      col("c.doc_id").as("doc_id"), lit(1).as("sign"), col("c.lsn").as("lsn"),
-      cc("tokens").cast(ArrayType(IntegerType)).as("tokens"),
-      cc("n_tok").cast("long").as("n_tok"),
-      cc("source").cast("string").as("source"),
-      cc("lang").cast("string").as("lang"))
-    val sides = array(
-      when(wins && col("o.doc_id").isNotNull && !col(s"o.${LakeTable.DeletedCol}"), preRow),
-      when(wins && col("c.op") =!= "D", postRow))
-    joined
-      .select(explode(filter(sides, x => x.isNotNull)).as("r"))
-      .select(col("r.*"))
-      .write.mode("overwrite").parquet(stagedDeltaFeed(table, batchId))
-  }
 
   /** Publish a staged delta-feed partition (same atomic-rename
     * discipline and crash-window healing as [[publishChangelog]]). */
@@ -346,94 +281,129 @@ object BatchApply {
       }
       val cowBuckets = touched -- deltaBuckets
 
-      val userSchema = snap.schema
-      val changeTypes = canonical.schema.fields.map(f => f.name -> f.dataType).toMap
-
-      /** canonical rows projected straight to the physical schema. */
-      def asPhysical(df: DataFrame): DataFrame = {
-        val userCols = userSchema.fields.map { f =>
-          graft.lake.SchemaCompat.castTo(col(f.name), changeTypes(f.name), f.dataType).as(f.name)
-        }.toIndexedSeq
-        df.select(userCols ++ Seq(
-          col("lsn").as(LakeTable.LsnCol),
-          (col("op") === "D").as(LakeTable.DeletedCol),
-          col("bucket")): _*)
-      }
-
       // write-side shuffle elision: bucketExpr IS Spark's shuffle hash,
       // so when the session's shuffle partition count equals nBuckets,
       // the merge output (exchanged on doc_id) already confines every
       // bucket to a single task — write straight through. (AQE may
-      // coalesce/split partitions; per-file manifest stats keep that
-      // correct, it only costs extra files.)
+      // coalesce/split partitions; per-file stats keep that correct, it
+      // only costs extra files.)
       // (read via sessionState: RuntimeConfig.get(key, default) VALIDATES
       // the default string, and "0" is rejected when the session never
       // set the key explicitly — the spark-submit case)
       val aligned = canonicalIn.sparkSession.sessionState.conf.numShufflePartitions == snap.nBuckets
 
-      // ---- COW side: full-outer merge against the resolved target
-      val cowFiles: Seq[LakeTable.DataFile] = if (cowBuckets.isEmpty) Nil else {
-        val cowCanonical =
-          if (deltaBuckets.isEmpty) canonical
-          else canonical.filter(col("bucket").isin(cowBuckets.toSeq.map(Integer.valueOf): _*))
-        val targetFiles = snap.files.exists(f => cowBuckets.contains(f.bucket))
-        val merged = if (!targetFiles) {
-          // fast path (first batch / all-new buckets): nothing to merge
-          asPhysical(cowCanonical)
-        } else {
-          val t = table.readResolved(Some(cowBuckets), Some(snap)).as("t")
-          val c = cowCanonical.as("c")
-          val joined = t.join(c, col("t.doc_id") === col("c.doc_id"), "full_outer")
+      // ---- ONE merge pass, ONE write job. The persisted canonical rows
+      //      full-outer-join the resolved touched buckets (read once, and
+      //      only when a COW bucket has target files or pre-images are
+      //      on), and every joined row emits a tagged stream: the merged
+      //      COW row or the MOR delta row, the change-feed row, and the
+      //      signed pre/post-image rows. The winner decision
+      //      (`c.lsn > t._lsn`) is the same expression for the data and
+      //      the images, so the staged images are exactly the state
+      //      transition the commit installs: a change that loses the
+      //      merge emits no image (the change feed still records it).
+      //      The tasks route rows by tag into data files and the two
+      //      staged feed dirs ([[graft.lake.TaskWriter]]).
+      val images = changelog && preimages
+      val readBuckets = if (images) touched else cowBuckets
+      val target = snap.files.exists(f => readBuckets(f.bucket))
+      val c = canonical.as("c")
+      val joined =
+        if (!target) c
+        else table.readResolved(Some(readBuckets), Some(snap)).as("t")
+          .join(c, col("t.doc_id") === col("c.doc_id"), "full_outer")
+      def t(n: String): Column = if (target) col(s"t.$n") else lit(null)
+      val userSchema = snap.schema
+      val userType = userSchema.fields.map(f => f.name -> f.dataType).toMap
+      val changeType = canonical.schema.fields.map(f => f.name -> f.dataType).toMap
+      /** a change column cast to the TABLE's type (the post row must
+        * equal the row a direct read serves); null when the table lacks it */
+      def fromC(n: String): Column =
+        if (userType.contains(n)) graft.lake.SchemaCompat.castTo(col(s"c.$n"), changeType(n), userType(n))
+        else lit(null)
+      def fromT(n: String): Column = if (userType.contains(n)) t(n) else lit(null)
 
-          val changeWins = col("t.doc_id").isNull ||
-            (col("c.doc_id").isNotNull && col("c.lsn") > col(s"t.${LakeTable.LsnCol}"))
+      val hasT = if (target) col("t.doc_id").isNotNull else lit(false)
+      val hasC = col("c.doc_id").isNotNull
+      val wins = !hasT || (hasC && col("c.lsn") > t(LakeTable.LsnCol))
+      val bucket =
+        if (target) coalesce(col("c.bucket"), LakeTable.bucketExpr(col("t.doc_id"), snap.nBuckets))
+        else col("c.bucket")
+      val isCow =
+        if (deltaBuckets.isEmpty) lit(true)
+        else if (cowBuckets.isEmpty) lit(false)
+        else bucket.isin(cowBuckets.toSeq.map(Integer.valueOf): _*)
+      // a COW bucket keeps the target row unless the change wins; a MOR
+      // bucket appends every change (readers resolve max _lsn per key)
+      val keepT = isCow && !wins
 
-          val userCols = userSchema.fields.map { f =>
-            val fromChange = graft.lake.SchemaCompat.castTo(
-              col(s"c.${f.name}"), changeTypes(f.name), f.dataType)
-            when(changeWins, fromChange).otherwise(col(s"t.${f.name}")).as(f.name)
-          }.toIndexedSeq
-          joined.select(
-            userCols ++ Seq(
-              when(changeWins, col("c.lsn")).otherwise(col(s"t.${LakeTable.LsnCol}")).as(LakeTable.LsnCol),
-              when(changeWins, col("c.op") === "D").otherwise(col(s"t.${LakeTable.DeletedCol}")).as(LakeTable.DeletedCol)
-            ): _*)
-            .withColumn("bucket", LakeTable.bucketExpr(col("doc_id"), snap.nBuckets))
-        }
-        table.writeDataFiles(merged, snap.schemaId, repartitionByBucket = !aligned)
+      val phys = LakeTable.asNullable(snap.physicalSchema(snap.schemaId))
+      val feedFile = (s: StructType) => StructType(s.fields.filter(_.name != "batch_id"))
+      val outs = IndexedSeq(table.dataOut(phys)) ++
+        (if (changelog) Seq(graft.lake.TaskWriter.Out(stagedChangelog(table, batchId),
+          feedFile(LakeTable.changeFeedSchemaOf(snap.schema)))) else Nil) ++
+        (if (images) Seq(graft.lake.TaskWriter.Out(stagedDeltaFeed(table, batchId),
+          feedFile(LakeTable.deltaFeedSchema))) else Nil)
+      /** one tagged element: `kind`, then one struct per output, only
+        * this kind's filled (cast field by field to its file schema) */
+      def tagged(cond: Column, kind: Int, cols: Column*): Column =
+        when(cond, struct(lit(kind).as("kind") +: outs.indices.map { k =>
+          val s = outs(k).schema
+          (if (k != kind) lit(null).cast(s)
+          else struct(s.fields.zip(cols).map { case (f, v) => v.cast(f.dataType).as(f.name) }.toIndexedSeq: _*))
+            .as(s"p$k")
+        }: _*))
+      val dataRow = tagged(isCow || hasC, 0, userSchema.fieldNames.toIndexedSeq.map(n =>
+          when(keepT, t(n)).otherwise(fromC(n))) ++ Seq(
+        when(keepT, t(LakeTable.LsnCol)).otherwise(col("c.lsn")),
+        when(keepT, t(LakeTable.DeletedCol)).otherwise(col("c.op") === "D")): _*)
+      val changeRow = tagged(hasC, 1, col("c.doc_id"), col("c.op"), col("c.lsn"), col("c.tokens"),
+        col("c.n_tok"), col("c.source"), col("c.lang"), col("c.shard"))
+      // pre-image: the key was LIVE before this batch and the change
+      // wins; post-image: what the merge installs, unless a delete
+      val preRow = tagged(hasC && wins && hasT && !t(LakeTable.DeletedCol), 2,
+        col("c.doc_id"), lit(-1), t(LakeTable.LsnCol),
+        fromT("tokens"), fromT("n_tok"), fromT("source"), fromT("lang"))
+      val postRow = tagged(hasC && wins && col("c.op") =!= "D", 2,
+        col("c.doc_id"), lit(1), col("c.lsn"),
+        fromC("tokens"), fromC("n_tok"), fromC("source"), fromC("lang"))
+      val rows = joined
+        .select(bucket.as("bucket"), coalesce(col("c.doc_id"), t("doc_id")).as("key"),
+          explode(array(Seq(dataRow) ++ (if (changelog) Seq(changeRow) else Nil) ++
+            (if (images) Seq(preRow, postRow) else Nil): _*)).as("e"))
+        .filter(col("e").isNotNull)
+        .select(col("e.kind") +: col("bucket") +: col("key") +: outs.indices.map(k => col(s"e.p$k")): _*)
+
+      // ---- STAGE (hidden dot-dirs) before the commit, PUBLISH (one
+      //      atomic rename each) after it: a visible feed partition only
+      //      ever holds a COMMITTED batch's COMPLETE changes. The staged
+      //      dirs are cleared before the write (files of a failed earlier
+      //      attempt of this batch); after it, any staged file that no
+      //      successful task reported (a failed or superseded task
+      //      attempt) is deleted, and a feed that got no rows still gets
+      //      its empty dir, so every applied batch publishes a partition.
+      //      The commit-landed/publish-missing crash window is healed by
+      //      the batch's retry (the fence path above, reached via
+      //      Replay's fenced branch) with the same rename — a metadata
+      //      op on the staged content, never a recomputation.
+      val conf = table.spark.sparkContext.hadoopConfiguration
+      outs.tail.foreach { o =>
+        val d = new org.apache.hadoop.fs.Path(o.dir)
+        d.getFileSystem(conf).delete(d, true)
       }
-
-      // ---- delta side: append the canonical changes as overlay files
-      val deltaFiles: Seq[LakeTable.DataFile] = if (deltaBuckets.isEmpty) Nil else {
-        val deltaCanonical = canonical.filter(
-          col("bucket").isin(deltaBuckets.toSeq.map(Integer.valueOf): _*))
-        table.writeDataFiles(asPhysical(deltaCanonical), snap.schemaId,
-          repartitionByBucket = !aligned).map(_.copy(delta = true))
+      val written = graft.lake.TaskWriter.write(
+        if (aligned) rows else rows.repartition(col("bucket")), outs)
+      outs.indices.tail.foreach { k =>
+        graft.lake.TaskWriter.keepOnlyReported(conf, outs(k).dir, written.filter(_.kind == k))
       }
-
-      // ---- opt-in change-data feed (the table as a CDC SOURCE — read
-      //      back via LakeTable.readChanges): the canonical rows are
-      //      exactly what this commit merges, so emitting them is one
-      //      O(batch) parquet write riding the already-persisted
-      //      canonical frame, never a post-hoc snapshot diff (O(table)).
-      //      STAGE (hidden dot-dir) before the commit, PUBLISH (one
-      //      atomic rename) after it: a visible partition therefore
-      //      only ever holds a COMMITTED batch's COMPLETE changes — a
-      //      live tailer never sees partial writes or rows the upstream
-      //      later disowns. The commit-landed/publish-missing crash
-      //      window is healed by the batch's retry (the fence path
-      //      above, reached via Replay's fenced branch) with the same
-      //      rename — a metadata op on the already-staged content,
-      //      never a recomputation.
-      if (changelog) stageChangelog(table, canonical, batchId)
-      if (changelog && preimages) stageDeltaFeed(table, canonical, snap, touched, batchId)
-      val committed =
-        table.commit(cowFiles ++ deltaFiles, cowBuckets, batchId, watermarks, lineage, snap.version)
+      val files = written.filter(_.kind == 0).map(w => table.dataFile(w, snap.schemaId)
+        .copy(delta = deltaBuckets(w.bucket)))
+      val committed = table.commit(files, cowBuckets, batchId, watermarks, lineage, snap.version)
       // replace: this process just committed batchId, so the staged dir
       // is authoritative — a pre-existing final partition is a stale
       // orphan of an interrupted rollback and must not win
       if (changelog) publishChangelog(table, batchId, replace = true)
-      if (changelog && preimages) publishDeltaFeed(table, batchId, replace = true)
+      if (images) publishDeltaFeed(table, batchId, replace = true)
       committed
     } finally canonical.unpersist(false)
   }

@@ -73,8 +73,8 @@ import org.apache.spark.sql.functions._
  * aggregate, on both the init and every incremental path (the round-4
  * store represented this case differently per path).
  *
- * Contracts: the table must be replayed with `changelog=true` (the
- * fallback raises readChanges' curated error otherwise; the fast path
+ * Contracts: the table must be replayed with `changelog=true` (a
+ * sync raises the feed's curated no-changelog error otherwise; the fast path
  * additionally needs `preimages=true` over the whole unsynced range —
  * mixed ranges fall back automatically), and syncs must happen within
  * the feed's retention window (`changelogRetainBatches` vacuum) — the
@@ -201,7 +201,7 @@ object Ivm {
     // every feed read is fenced at the pinned `cur`: a batch committed
     // mid-sync is past the watermark this sync publishes, so it must
     // wait for the next sync, not be counted now and again then
-    val feedIds = table.readChanges(m.batchId, cur.batchId) // raises the curated no-changelog error
+    table.requireChangelog()
     if (table.deltaFeedCovers(m.batchId, cur.batchId)) {
       // ---- FAST PATH: one aggregation of the signed feed rows; ZERO
       //      table reads. `sign` IS the contribution sign.
@@ -211,6 +211,7 @@ object Ivm {
     } else {
       // ---- FALLBACK: changed keys from the main feed, both pinned
       //      snapshots read at those keys (point-lookup or join regime)
+      val feedIds = table.readChanges(m.batchId, cur.batchId)
       val oldSnap = table.snapshotAt(m.version)
       // persisted: consumed by the bucket-set probe + two joins
       val changed = feedIds.select(col("doc_id")).distinct()
@@ -253,9 +254,8 @@ object Ivm {
   def readAgg(spark: SparkSession, aggDir: String): DataFrame = {
     val m = readMeta(spark, aggDir).getOrElse(
       throw new IllegalStateException(s"no IVM state under $aggDir — run sync first"))
-    val grpName = m.grpDdl.trim.split("\\s+")(0).stripPrefix("`").stripSuffix("`")
-    readStateParts(spark, aggDir, m, m.parts.keySet)
-      .select(col(grpName), col("cnt"),
+    val state = readStateParts(spark, aggDir, m, m.parts.keySet)
+    state.select(col(state.columns(0)), col("cnt"),
         when(col("nnz") === 0, lit(null).cast("long"))
           .otherwise(col("sum0")).as("sum_val"))
   }
@@ -302,29 +302,24 @@ object Ivm {
       (j \ "parts").extract[Map[String, String]].map { case (k, v) => k.toInt -> v }))
   }
 
-  /** State rows (grp, cnt, nnz, sum0) of the given buckets, read from
-    * the data dirs the manifest maps them to (directory-pruned: each
-    * referenced dir is read once, filtered to ITS buckets). */
+  /** State rows (grp, cnt, nnz, sum0) of the given buckets: ONE scan
+    * of the `pb=<j>` dirs the manifest maps them to, with the explicit
+    * state schema (no footer-inference job). Each dir holds exactly
+    * its bucket's rows, so the path list is the bucket filter, and `pb`
+    * itself (a directory name, not a file column) is not read. */
   private def readStateParts(spark: SparkSession, aggDir: String, m: Meta,
       pbs: Set[Int]): DataFrame = {
-    val grpName = m.grpDdl.trim.split("\\s+")(0).stripPrefix("`").stripSuffix("`")
-    val byDir = m.parts.filter { case (pb, _) => pbs(pb) }
-      .groupBy(_._2).view.mapValues(_.keySet).toMap
-    val frames = byDir.toSeq.sortBy(_._1).map { case (dirName, dirPbs) =>
-      spark.read.option("basePath", s"$aggDir/$dirName")
-        .parquet(s"$aggDir/$dirName")
-        .filter(col("pb").isin(dirPbs.toSeq.map(Integer.valueOf): _*))
-        .select(col(grpName), col("cnt"), col("nnz"), col("sum0"))
-    }
-    frames.reduceOption(_ unionByName _).getOrElse {
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        s"${m.grpDdl}, cnt BIGINT, nnz BIGINT, sum0 BIGINT")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      s"${m.grpDdl}, cnt BIGINT, nnz BIGINT, sum0 BIGINT")
+    val dirs = m.parts.toSeq.filter { case (pb, _) => pbs(pb) }.sorted
+      .map { case (pb, dir) => s"$aggDir/$dir/pb=$pb" }
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(dirs: _*)
   }
 
   /** Write the given state rows (all buckets on init, changed buckets
-    * on sync) into a fresh `data-<uuid>` dir partitioned by pb, then
+    * on sync) into a fresh `data-<uuid>` dir, one `pb=<j>/` subdir per
+    * bucket, in one task-side write job ([[TaskWriter]]), then
     * CAS-publish the next manifest mapping changed buckets to the new
     * dir and unchanged buckets to their existing dirs. On a CAS loss
     * the new data dir is deleted and the loser throws. After a win,
@@ -341,18 +336,23 @@ object Ivm {
     }
     val nextV = prev.fold(0L)(_.manifestVersion) + 1L
     val parts = try {
-      rows.withColumn("pb", pbCol(col(grp), nb))
-        .repartition(col("pb"))
-        .write.partitionBy("pb").parquet(s"$aggDir/$dirName")
+      val dir = s"$aggDir/$dirName"
+      val tagged = rows.select(lit(0).as("kind"), pbCol(col(grp), nb).as("bucket"),
+        col(grp).as("key"), struct(rows.columns.toIndexedSeq.map(col): _*))
       // which buckets actually hold rows now (a changed bucket whose
-      // groups all went extinct writes no dir and leaves the manifest)
-      val written = fs.listStatus(new Path(aggDir, dirName))
-        .map(_.getPath.getName).filter(_.startsWith("pb="))
-        .map(_.stripPrefix("pb=").toInt).toSet
+      // groups all went extinct writes no file and leaves the manifest);
+      // a bucket's dir is read whole, so a failed task attempt's files
+      // must not stay in it
+      val written = TaskWriter.write(tagged.repartition(col("bucket")),
+        IndexedSeq(TaskWriter.Out(dir, LakeTable.asNullable(rows.schema), bucketDir = Some("pb"))))
+        .groupBy(_.bucket)
+      written.foreach { case (pb, ws) =>
+        TaskWriter.keepOnlyReported(spark.sparkContext.hadoopConfiguration, s"$dir/pb=$pb", ws)
+      }
       val parts = prev match {
-        case None => written.map(_ -> dirName).toMap
+        case None => written.keySet.map(_ -> dirName).toMap
         case Some(p) =>
-          (p.parts -- changedPbs.getOrElse(Set.empty)) ++ written.map(_ -> dirName).toMap
+          (p.parts -- changedPbs.getOrElse(Set.empty)) ++ written.keySet.map(_ -> dirName).toMap
       }
       WriterLease.guard(spark, aggDir, lease) // pre-publish fence re-check
       casWrite(spark, aggDir, nextV, manifestJson(version, batchId, nb, grpDdl, parts))

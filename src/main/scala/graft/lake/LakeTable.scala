@@ -108,10 +108,10 @@ object LakeTable {
     * 40-133`), which likewise replays old cell values. */
   val DeltaFeedDir = "changelog_delta"
 
-  /** Schema of [[LakeTable.readChanges]] rows: the staged feed columns
-    * (see `BatchApply.stageChangelog`'s projection) plus the `batch_id`
-    * partition column Spark appends last (partition-value inference
-    * types int-ranged batch ids as INT, so the empty frame matches). */
+  /** Columns of [[LakeTable.readChanges]] rows: the canonical change's
+    * payload, `shard`, and the `batch_id` partition column, last. The
+    * payload takes the table's own types ([[changeFeedSchemaOf]]); this
+    * is the shape of a feed with no published batch yet. */
   val changeFeedSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -121,6 +121,17 @@ object LakeTable {
       StructField("lang", StringType), StructField("shard", IntegerType),
       StructField("batch_id", IntegerType)))
   }
+
+  /** The change feed's file and read schema for a table whose user
+    * schema is `user`: [[changeFeedSchema]] with each payload column at
+    * the table's type (a long-keyed table keeps long keys; `lang` stays
+    * a string until the table evolves to carry it), all nullable.
+    * [[graft.apply.BatchApply]] writes the feed at the applying
+    * snapshot's schema and every read passes the current one, so no
+    * read infers a schema, and a column an evolution widened (int
+    * `n_tok` to long) widens on read. */
+  def changeFeedSchemaOf(user: StructType): StructType = asNullable(StructType(
+    changeFeedSchema.fields.map(f => user.find(_.name == f.name).fold(f)(u => f.copy(dataType = u.dataType)))))
 
   /** Schema of [[LakeTable.readDeltaChanges]] rows: the payload columns
     * at the table's EVOLVED shape (n_tok already widened, lang present
@@ -309,28 +320,17 @@ object LakeTable {
 
   def load(spark: SparkSession, root: String): LakeTable = new LakeTable(spark, root)
 
-  /** (rows, min `lsnCol`, max `lsnCol`) of one parquet file from its
-    * footer's column-chunk statistics — static so executor closures
-    * don't capture a LakeTable/SparkSession. */
-  private[lake] def readFooterStats(conf: org.apache.hadoop.conf.Configuration,
-      path: String, lsnCol: String): (Long, Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val rows = blocks.map(_.getRowCount).sum
-      val lsnStats = blocks.flatMap { blk =>
-        blk.getColumns.asScala
-          .find(_.getPath.toDotString == lsnCol)
-          .map(_.getStatistics)
-          .filter(s => s != null && !s.isEmpty)
-      }
-      require(lsnStats.nonEmpty, s"no $lsnCol statistics in footer of $path")
-      val mins = lsnStats.map(_.genericGetMin.asInstanceOf[Number].longValue)
-      val maxs = lsnStats.map(_.genericGetMax.asInstanceOf[Number].longValue)
-      (rows, mins.min, maxs.max)
-    } finally reader.close()
+  /** `t` with every field, array element and map value nullable: the
+    * file schema of a task-side write, so a row whose columns are
+    * nullable-typed always casts to it. */
+  private[graft] def asNullable(t: StructType): StructType = {
+    def go(d: DataType): DataType = d match {
+      case StructType(fs) => StructType(fs.map(f => f.copy(dataType = go(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(go(e), containsNull = true)
+      case MapType(k, v, _) => MapType(go(k), go(v), valueContainsNull = true)
+      case other => other
+    }
+    go(t).asInstanceOf[StructType]
   }
 
   private val SnapshotRe = """v(\d+)\.json""".r
@@ -466,7 +466,10 @@ class LakeTable(val spark: SparkSession, val root: String) {
       val resolved = readPhysical(Some(deltaBuckets), Some(s))
         .groupBy(col("doc_id"))
         .agg(max_by(payload, col(LsnCol)).as("w"))
-        .select(physCols.map(c => col(s"w.$c").as(c)): _*)
+        // doc_id from the grouping key, not the struct: the output then
+        // keeps the aggregate's hash(doc_id) partitioning, so a join on
+        // doc_id needs no second exchange
+        .select(physCols.map(c => if (c == "doc_id") col(c) else col(s"w.$c").as(c)): _*)
       if (plainBuckets.isEmpty) resolved
       else readPhysical(Some(plainBuckets), Some(s)).unionByName(resolved)
     }
@@ -511,8 +514,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * primitive for consumers that want STATE, not the change feed; works
     * on any table, feed enabled or not, because it reads only manifest
     * stats + data files). Zone-map pruning: the manifest's per-file
-    * (minLsn, maxLsn) footer stats — already collected at commit time
-    * for the lineage — bound every file's `_lsn` domain, so a bucket
+    * (minLsn, maxLsn) stats — counted by the tasks that wrote the
+    * files — bound every file's `_lsn` domain, so a bucket
     * none of whose files reaches `sinceLsn` cannot hold a qualifying
     * current row and is skipped WITHOUT touching storage. A 10^10-row
     * table where the last day touched 2% of buckets exports that day by
@@ -556,9 +559,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * into the directory. */
   def readChanges(sinceBatchId: Long = -1L,
       untilBatchId: Long = current.batchId): DataFrame = {
+    requireChangelog()
     val dir = new Path(root, ChangelogDir)
-    require(fs.exists(dir),
-      s"no changelog under $root — replay with changelog=true to enable the change feed")
     val cols = LakeTable.changeFeedSchema.fieldNames.map(col).toIndexedSeq
     // Compacted history ([[compactChangelog]]): at most one LIVE ranged
     // store — the max-hi dir (every compaction subsumes all earlier
@@ -574,22 +576,28 @@ class LakeTable(val spark: SparkSession, val root: String) {
     }
     // A feed dir with no PUBLISHED batch_id= partition yet (e.g. crash
     // after staging but before the first commit leaves only a
-    // .staged- dot-dir) would make the parquet read fail with an opaque
-    // "unable to infer schema"; a polling tailer instead gets an empty
-    // frame with the feed schema — the same thing it would see one
-    // instant before the first publish.
+    // .staged- dot-dir) reads as an empty frame with the feed schema —
+    // the same thing a polling tailer would see one instant before the
+    // first publish. Explicit schema: no footer-inference job per read.
     val parts =
       if (!hasParts) None
-      else Some(spark.read.option("basePath", dir.toString).parquet(dir.toString)
+      else Some(spark.read.schema(changeFeedSchemaOf(current.schema))
+        .option("basePath", dir.toString).parquet(dir.toString)
         .filter(col("batch_id") > coveredHi).select(cols: _*))
     val rangedDf = ranged.map { case (_, _, p) =>
-      spark.read.parquet(p.toString).select(cols: _*)
+      spark.read.schema(changeFeedSchemaOf(current.schema)).parquet(p.toString).select(cols: _*)
     }
     val all = (rangedDf.toSeq ++ parts.toSeq).reduceOption(_ unionByName _)
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LakeTable.changeFeedSchema))
     all.filter(col("batch_id") > sinceBatchId && col("batch_id") <= untilBatchId)
   }
+
+  /** The curated error for a feed read on a table replayed without
+    * `changelog = true`. */
+  private[graft] def requireChangelog(): Unit =
+    require(fs.exists(new Path(root, ChangelogDir)),
+      s"no changelog under $root — replay with changelog=true to enable the change feed")
 
   /** PRE-IMAGE DELTA READ — signed state-change rows of every batch in
     * `(sinceBatchId, untilBatchId]` (see [[LakeTable.DeltaFeedDir]]).
@@ -707,10 +715,13 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val lo = prior.lastOption.map(_._1).getOrElse(parts.head)
     val hi = parts.max
     val cols = LakeTable.changeFeedSchema.fieldNames.map(col).toIndexedSeq
-    val fresh = spark.read.option("basePath", dir.toString).parquet(dir.toString)
+    val feedSchema = changeFeedSchemaOf(current.schema)
+    val fresh = spark.read.schema(feedSchema)
+      .option("basePath", dir.toString).parquet(dir.toString)
       .filter(col("batch_id") > priorHi && col("batch_id") <= cutoff).select(cols: _*)
     val all = prior.lastOption match {
-      case Some((_, _, p)) => spark.read.parquet(p.toString).select(cols: _*).unionByName(fresh)
+      case Some((_, _, p)) =>
+        spark.read.schema(feedSchema).parquet(p.toString).select(cols: _*).unionByName(fresh)
       case None => fresh
     }
     val tmp = new Path(dir, s".tmp${LakeTable.RangedFeedPrefix}$lo-$hi")
@@ -762,70 +773,42 @@ class LakeTable(val spark: SparkSession, val root: String) {
   // --------------------------------------------------------------- write
 
   /** Write `df` (physical rows WITH a `bucket` column) as parquet files
-    * under data/ (typically one per touched bucket), returning manifest
+    * under a fresh `data/c-<uuid>/` commit dir, one file per (task,
+    * bucket), each sorted by `doc_id`, and return their manifest
     * entries. Not yet visible — call [[commit]] to publish.
     *
-    * Files land in their FINAL location (a unique per-write commit
-    * directory): visibility is governed solely by the snapshot manifest,
-    * so no per-file rename pass exists at all — the reference's
-    * temp+rename 2PC (`HdfsWriter.java:193-324`) collapses to the single
-    * snapshot-descriptor publish, and a crash leaves only unreferenced
-    * files that [[vacuum]] removes. Per-file (rows, lsn min/max) stats
-    * come from parquet FOOTERS read ON THE EXECUTORS — one distributed
-    * metadata job, never a serial driver loop over thousands of files
-    * (the Iceberg task-side DataFile-collection pattern).
+    * One Spark job, no file committer: each task writes its FINAL,
+    * uniquely named files and returns every file's rows and `_lsn`
+    * min/max, counted as it wrote them — the Iceberg task-side
+    * `DataFile` collection ([[TaskWriter]]). Visibility is governed
+    * solely by the snapshot manifest, so the reference's temp+rename
+    * 2PC (`HdfsWriter.java:193-324`) collapses to the single
+    * snapshot-descriptor publish, and a crash or a failed task attempt
+    * leaves only unreferenced files that [[vacuum]] removes.
     *
     * `repartitionByBucket = false` skips the write-side shuffle: callers
     * use it when the incoming partitioning already confines each bucket
     * to one task (the MERGE join's hash(doc_id) exchange with
     * numPartitions == nBuckets — see [[LakeTable.bucketExpr]]). Stats
-    * are collected per FILE, so multiple files per bucket (AQE skew
-    * splits, unaligned callers) stay correct. */
+    * are per FILE, so multiple files per bucket (AQE skew splits,
+    * unaligned callers) stay correct. */
   def writeDataFiles(df: DataFrame, schemaId: Int, repartitionByBucket: Boolean = true): Seq[DataFile] = {
-    val s = current
-    val commitDir = s"data/c-${UUID.randomUUID()}"
-    val out = new Path(root, commitDir)
-    val phys = s.physicalSchema(schemaId)
-    val cols = phys.fieldNames.map(col).toIndexedSeq :+ col("bucket")
-    val projected = df.select(cols: _*)
-    val arranged = if (repartitionByBucket) projected.repartition(col("bucket")) else projected
-    arranged
-      .sortWithinPartitions(col("bucket"), col("doc_id"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(out.toString)
-
-    // driver does only the (2-level) listing; footer reads fan out
-    val staged: Seq[(String, Int)] = fs.listStatus(out).filter(_.isDirectory).flatMap { d =>
-      val b = d.getPath.getName.stripPrefix("bucket=").toInt
-      fs.listStatus(d.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-        .map(f => (s"$commitDir/bucket=$b/${f.getPath.getName}", b))
-    }.toIndexedSeq
-    if (staged.isEmpty) { fs.delete(out, true); return Nil }
-    footerStatsDistributed(staged).map { case (rel, b, rows, minL, maxL) =>
-      DataFile(rel, b, rows, minL, maxL, schemaId)
-    }
+    val out = dataOut(asNullable(current.physicalSchema(schemaId)))
+    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val rows = df.select(lit(0).as("kind"), col("bucket"), col("doc_id").as("key"),
+      struct(out.schema.fields.map(f =>
+        SchemaCompat.castTo(col(f.name), have(f.name), f.dataType).as(f.name)).toIndexedSeq: _*))
+    TaskWriter.write(if (repartitionByBucket) rows.repartition(col("bucket")) else rows, IndexedSeq(out))
+      .map(dataFile(_, schemaId))
   }
 
-  /** (path, bucket, rows, min _lsn, max _lsn) per file, footers opened on
-    * executors (hadoop conf shipped as Writable bytes — footer reads are
-    * read-only, so task retries are trivially idempotent). */
-  private def footerStatsDistributed(files: Seq[(String, Int)]): Seq[(String, Int, Long, Long, Long)] = {
-    val confBytes = {
-      val baos = new java.io.ByteArrayOutputStream()
-      spark.sparkContext.hadoopConfiguration.write(new java.io.DataOutputStream(baos))
-      baos.toByteArray
-    }
-    val rootStr = root
-    val lsnCol = LsnCol
-    val slices = math.min(files.size, math.max(1, spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(files, slices).mapPartitions { it =>
-      val conf = new org.apache.hadoop.conf.Configuration(false)
-      conf.readFields(new java.io.DataInputStream(new java.io.ByteArrayInputStream(confBytes)))
-      it.map { case (rel, b) =>
-        val (rows, minL, maxL) = LakeTable.readFooterStats(conf, s"$rootStr/$rel", lsnCol)
-        (rel, b, rows, minL, maxL)
-      }
-    }.collect().toIndexedSeq
-  }
+  /** The data output of one write: a fresh commit dir, bucketed. */
+  private[graft] def dataOut(phys: StructType): TaskWriter.Out =
+    TaskWriter.Out(s"$root/data/c-${UUID.randomUUID()}", phys, Some(LsnCol), Some("bucket"))
+
+  /** The manifest entry of a data file a task wrote under [[dataOut]]. */
+  private[graft] def dataFile(w: TaskWriter.Written, schemaId: Int): DataFile =
+    DataFile(w.path.stripPrefix(s"$root/"), w.bucket, w.rows, w.minLsn, w.maxLsn, schemaId)
 
   /** Publish a new snapshot: replace all files of `replacedBuckets` with
     * `newFiles`, advance batch/watermark/lineage metadata. Retries are the
@@ -1104,7 +1087,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
             val live = new Path(clDir, s"${LakeTable.RangedFeedPrefix}$keepLo-$hi")
             fs.delete(tmp, true)
             fs.delete(live, true) // crashed-rewrite leftover
-            spark.read.parquet(p.toString).filter(col("batch_id") > cutoff)
+            spark.read.schema(changeFeedSchemaOf(current.schema)).parquet(p.toString)
+              .filter(col("batch_id") > cutoff)
               .select(cols: _*)
               .repartitionByRange(col("batch_id"), col("doc_id"))
               .sortWithinPartitions(col("batch_id"), col("doc_id"))
