@@ -1203,8 +1203,9 @@ object SparkEntry {
     // CDC REPLICATION closed at the driver level (feed OUT → replay IN,
     // the reader.table chaining §2.3/§2.2-7 spec-tests promoted to an
     // oracle row): a SECOND replay tails the q87 table's change feed —
-    // `changelog/` partitions are exactly a binlog dir to the file
-    // source — into a mirror table, through the same canonicalize →
+    // given the table root, Replay reads it through the snapshot-driven
+    // tail source, one upstream batch's committed feed set after
+    // another — into a mirror table, through the same canonicalize →
     // MERGE → commit path, including the mid-stream lang evolution the
     // feed rows carry. The mirror's final state must equal DuckDB's
     // global last-wins over the ORIGINAL derived events (q80's oracle):
@@ -1215,9 +1216,7 @@ object SparkEntry {
       val root = ivmFixtures(dir)
       val mroot = mirrorFixtures.getOrElseUpdate(dir, {
         val d = java.nio.file.Files.createTempDirectory("graft-mirror-q").toString
-        graft.stream.Replay.replay(s,
-          s"$root/table/${graft.lake.LakeTable.ChangelogDir}",
-          s"$d/mirror", s"$d/cp", nBuckets = 4)
+        graft.stream.Replay.replay(s, s"$root/table", s"$d/mirror", s"$d/cp", nBuckets = 4)
         d
       })
       graft.lake.LakeTable.load(s, s"$mroot/mirror").read()

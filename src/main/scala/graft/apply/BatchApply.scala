@@ -1,6 +1,7 @@
 package graft.apply
 
 import graft.lake.LakeTable
+import graft.model.ChangeLog
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -48,22 +49,27 @@ object BatchApply {
     * canonical rows instead of a second full scan of the raw batch.
     * Keys are shard-sticky (one binlog shard owns a key — the model's
     * contract, same as the watermark fencing), so per-shard stats
-    * aggregate exactly from per-key stats. */
+    * aggregate exactly from per-key stats.
+    *
+    * A payload column the input lacks reads as null: the change feed of
+    * a table that never evolved carries no `lang`. */
   def canonicalize(events: DataFrame, saltBuckets: Int = 1): DataFrame = {
+    def in(n: String): Column =
+      if (events.columns.contains(n)) col(n) else lit(null).cast(ChangeLog.schema(n).dataType).as(n)
     val payload = struct(
-      col("lsn"), col("op"), col("tokens"), col("n_tok"), col("source"), col("lang"), col("shard"))
+      col("lsn"), col("op"), in("tokens"), in("n_tok"), in("source"), in("lang"), col("shard"))
     val pre =
       if (saltBuckets <= 1) events
         .groupBy(col("doc_id"))
         .agg(max_by(payload, col("lsn")).as("w"), count(lit(1)).as("n_events"),
-          min(col("lsn")).as("min_lsn"), max(col("lang").isNotNull.cast("int")).as("has_lang"),
+          min(col("lsn")).as("min_lsn"), max(in("lang").isNotNull.cast("int")).as("has_lang"),
           max((col("op") === "I").cast("int")).as("has_insert"))
       else events
         // two-phase for hot keys: salt pre-aggregation, then merge the
         // per-salt winners AND their partial stats
         .groupBy(col("doc_id"), pmod(col("lsn"), lit(saltBuckets.toLong)).as("_salt"))
         .agg(max_by(payload, col("lsn")).as("w"), count(lit(1)).as("n_events"),
-          min(col("lsn")).as("min_lsn"), max(col("lang").isNotNull.cast("int")).as("has_lang"),
+          min(col("lsn")).as("min_lsn"), max(in("lang").isNotNull.cast("int")).as("has_lang"),
           max((col("op") === "I").cast("int")).as("has_insert"))
         .groupBy(col("doc_id"))
         .agg(max_by(col("w"), col("w.lsn")).as("w"), sum(col("n_events")).as("n_events"),
@@ -107,65 +113,6 @@ object BatchApply {
       batch.filter(col("lsn") > coalesce(try_element_at(wmMap, col("shard")), lit(Long.MinValue)))
     }
 
-  private def changelogPartition(table: LakeTable, batchId: Long): String =
-    s"${table.root}/${LakeTable.ChangelogDir}/batch_id=$batchId"
-
-  /** Staging dir for a feed partition: dot-prefixed, so parquet readers
-    * and live directory tailers ignore it until publication. */
-  private[graft] def stagedChangelog(table: LakeTable, batchId: Long): String =
-    s"${table.root}/${LakeTable.ChangelogDir}/.staged-batch_id=$batchId"
-
-  /** PUBLISH a staged feed partition with one atomic directory rename
-    * (the same primitive as the snapshot-descriptor commit): live
-    * tailers see either no partition or the complete one — never a
-    * partial write, and never rows of an uncommitted batch (staging
-    * happens before the commit, publication after). Public because
-    * [[graft.stream.Replay]]'s fenced-retry path calls it to heal the
-    * commit-landed/publish-missing crash window — the staged content
-    * is EXACTLY what the committed run produced from its own input
-    * (transforms, dirty routing, dedup admission included), so the
-    * heal is a metadata op, never a recomputation. No-op when already
-    * published or never staged. */
-  /** `replace = true` ONLY on the fresh-commit path (this process just
-    * committed `batchId`, so the staged dir is authoritative): an
-    * existing final partition there is a stale orphan from a rollback
-    * whose cleanup was interrupted ([[LakeTable.rollbackTo]]) and must
-    * be replaced, not kept. Fenced retries keep the default — there the
-    * final partition is the previously published truth and a staged
-    * leftover is the debris. */
-  def publishChangelog(table: LakeTable, batchId: Long, replace: Boolean = false): Unit =
-    publishStagedDir(table, stagedChangelog(table, batchId),
-      changelogPartition(table, batchId), replace, s"changelog batch $batchId")
-
-  private def publishStagedDir(table: LakeTable, stagedDir: String, finalDir: String,
-      replace: Boolean, what: String): Unit = {
-    val conf = table.spark.sparkContext.hadoopConfiguration
-    val staged = new org.apache.hadoop.fs.Path(stagedDir)
-    val fin = new org.apache.hadoop.fs.Path(finalDir)
-    val fs = fin.getFileSystem(conf)
-    if (fs.exists(fin) && replace && fs.exists(staged)) fs.delete(fin, true)
-    if (fs.exists(fin)) {
-      if (fs.exists(staged)) fs.delete(staged, true) // republish race debris
-    } else if (fs.exists(staged)) {
-      if (!fs.rename(staged, fin))
-        throw new IllegalStateException(s"$what publish rename failed")
-    }
-  }
-
-  // ------------------------------------------------- pre-image delta feed
-
-  private def deltaFeedPartition(table: LakeTable, batchId: Long): String =
-    s"${table.root}/${LakeTable.DeltaFeedDir}/batch_id=$batchId"
-
-  private[graft] def stagedDeltaFeed(table: LakeTable, batchId: Long): String =
-    s"${table.root}/${LakeTable.DeltaFeedDir}/.staged-batch_id=$batchId"
-
-  /** Publish a staged delta-feed partition (same atomic-rename
-    * discipline and crash-window healing as [[publishChangelog]]). */
-  def publishDeltaFeed(table: LakeTable, batchId: Long, replace: Boolean = false): Unit =
-    publishStagedDir(table, stagedDeltaFeed(table, batchId),
-      deltaFeedPartition(table, batchId), replace, s"delta-feed batch $batchId")
-
   /** Apply one micro-batch. Returns the committed (or current, if fenced)
     * snapshot.
     *
@@ -184,13 +131,7 @@ object BatchApply {
       changelog: Boolean = false,
       preimages: Boolean = false): LakeTable.Snapshot = {
     val snap = table.current
-    if (batchId >= 0 && batchId <= snap.batchId) {
-      if (changelog && batchId == snap.batchId) {
-        publishChangelog(table, batchId)
-        if (preimages) publishDeltaFeed(table, batchId)
-      }
-      return snap
-    }
+    if (batchId >= 0 && batchId <= snap.batchId) return snap
     applyCanonical(table, prepare(table, batch, saltBuckets, assumeOrdered),
       batchId, deltaThreshold, maxDeltaChain, changelog, preimages)
   }
@@ -220,18 +161,10 @@ object BatchApply {
       changelog: Boolean = false,
       preimages: Boolean = false): LakeTable.Snapshot = {
     var snap = table.current
-    // ---- exactly-once fence: retry of an already-committed batch.
-    //      With the feed enabled, the only changelog work possibly left
-    //      undone is PUBLICATION (the staged partition was written
-    //      before that batch's commit; a crash between commit and
-    //      publish leaves it staged) — heal with the same atomic rename.
-    if (batchId >= 0 && batchId <= snap.batchId) {
-      if (changelog && batchId == snap.batchId) {
-        publishChangelog(table, batchId)
-        if (preimages) publishDeltaFeed(table, batchId)
-      }
-      return snap
-    }
+    // ---- exactly-once fence: retry of an already-committed batch. Its
+    //      feed files were recorded by the same commit as its data, so
+    //      nothing of it is left to do.
+    if (batchId >= 0 && batchId <= snap.batchId) return snap
 
     val canonical = canonicalIn
       .withColumn("bucket", LakeTable.bucketExpr(col("doc_id"), snap.nBuckets))
@@ -299,11 +232,11 @@ object BatchApply {
       //      COW row or the MOR delta row, the change-feed row, and the
       //      signed pre/post-image rows. The winner decision
       //      (`c.lsn > t._lsn`) is the same expression for the data and
-      //      the images, so the staged images are exactly the state
-      //      transition the commit installs: a change that loses the
-      //      merge emits no image (the change feed still records it).
-      //      The tasks route rows by tag into data files and the two
-      //      staged feed dirs ([[graft.lake.TaskWriter]]).
+      //      the images, so the images are exactly the state transition
+      //      the commit installs: a change that loses the merge emits no
+      //      image (the change feed still records it). The tasks route
+      //      rows by tag into data files and the two feeds' files
+      //      ([[graft.lake.TaskWriter]]).
       val images = changelog && preimages
       val readBuckets = if (images) touched else cowBuckets
       val target = snap.files.exists(f => readBuckets(f.bucket))
@@ -314,14 +247,15 @@ object BatchApply {
           .join(c, col("t.doc_id") === col("c.doc_id"), "full_outer")
       def t(n: String): Column = if (target) col(s"t.$n") else lit(null)
       val userSchema = snap.schema
+      val payload = userSchema.fieldNames.toIndexedSeq.filter(_ != "doc_id")
       val userType = userSchema.fields.map(f => f.name -> f.dataType).toMap
       val changeType = canonical.schema.fields.map(f => f.name -> f.dataType).toMap
       /** a change column cast to the TABLE's type (the post row must
-        * equal the row a direct read serves); null when the table lacks it */
+        * equal the row a direct read serves); null when the change
+        * lacks it (a column an evolution added beyond the event's) */
       def fromC(n: String): Column =
-        if (userType.contains(n)) graft.lake.SchemaCompat.castTo(col(s"c.$n"), changeType(n), userType(n))
+        if (changeType.contains(n)) graft.lake.SchemaCompat.castTo(col(s"c.$n"), changeType(n), userType(n))
         else lit(null)
-      def fromT(n: String): Column = if (userType.contains(n)) t(n) else lit(null)
 
       val hasT = if (target) col("t.doc_id").isNotNull else lit(false)
       val hasC = col("c.doc_id").isNotNull
@@ -338,17 +272,14 @@ object BatchApply {
       val keepT = isCow && !wins
 
       val phys = LakeTable.asNullable(snap.physicalSchema(snap.schemaId))
-      val feedFile = (s: StructType) => StructType(s.fields.filter(_.name != "batch_id"))
-      val outs = IndexedSeq(table.dataOut(phys)) ++
-        (if (changelog) Seq(graft.lake.TaskWriter.Out(stagedChangelog(table, batchId),
-          feedFile(LakeTable.changeFeedSchemaOf(snap.schema)))) else Nil) ++
-        (if (images) Seq(graft.lake.TaskWriter.Out(stagedDeltaFeed(table, batchId),
-          feedFile(LakeTable.deltaFeedSchema))) else Nil)
+      val feeds = (if (changelog) Seq(LakeTable.ChangelogDir) else Nil) ++
+        (if (images) Seq(LakeTable.DeltaFeedDir) else Nil)
+      val outs = table.dataOut(phys) +: feeds.map(table.feedOut(_, userSchema, batchId)).toIndexedSeq
       /** one tagged element: `kind`, then one struct per output, only
         * this kind's filled (cast field by field to its file schema) */
       def tagged(cond: Column, kind: Int, cols: Column*): Column =
         when(cond, struct(lit(kind).as("kind") +: outs.indices.map { k =>
-          val s = outs(k).schema
+          val s = outs(k).rowSchema
           (if (k != kind) lit(null).cast(s)
           else struct(s.fields.zip(cols).map { case (f, v) => v.cast(f.dataType).as(f.name) }.toIndexedSeq: _*))
             .as(s"p$k")
@@ -357,16 +288,16 @@ object BatchApply {
           when(keepT, t(n)).otherwise(fromC(n))) ++ Seq(
         when(keepT, t(LakeTable.LsnCol)).otherwise(col("c.lsn")),
         when(keepT, t(LakeTable.DeletedCol)).otherwise(col("c.op") === "D")): _*)
-      val changeRow = tagged(hasC, 1, col("c.doc_id"), col("c.op"), col("c.lsn"), col("c.tokens"),
-        col("c.n_tok"), col("c.source"), col("c.lang"), col("c.shard"))
+      // the feeds' columns in [[LakeTable.changeFeedSchema]] and
+      // [[LakeTable.deltaFeedSchema]] order, `batch_id` left to the tasks
+      val changeRow = tagged(hasC, 1, (Seq(col("c.doc_id"), col("c.op"), col("c.lsn")) ++
+        payload.map(fromC) :+ col("c.shard")): _*)
       // pre-image: the key was LIVE before this batch and the change
       // wins; post-image: what the merge installs, unless a delete
       val preRow = tagged(hasC && wins && hasT && !t(LakeTable.DeletedCol), 2,
-        col("c.doc_id"), lit(-1), t(LakeTable.LsnCol),
-        fromT("tokens"), fromT("n_tok"), fromT("source"), fromT("lang"))
+        Seq(col("c.doc_id"), lit(-1), t(LakeTable.LsnCol)) ++ payload.map(t): _*)
       val postRow = tagged(hasC && wins && col("c.op") =!= "D", 2,
-        col("c.doc_id"), lit(1), col("c.lsn"),
-        fromC("tokens"), fromC("n_tok"), fromC("source"), fromC("lang"))
+        Seq(col("c.doc_id"), lit(1), col("c.lsn")) ++ payload.map(fromC): _*)
       val rows = joined
         .select(bucket.as("bucket"), coalesce(col("c.doc_id"), t("doc_id")).as("key"),
           explode(array(Seq(dataRow) ++ (if (changelog) Seq(changeRow) else Nil) ++
@@ -374,37 +305,17 @@ object BatchApply {
         .filter(col("e").isNotNull)
         .select(col("e.kind") +: col("bucket") +: col("key") +: outs.indices.map(k => col(s"e.p$k")): _*)
 
-      // ---- STAGE (hidden dot-dirs) before the commit, PUBLISH (one
-      //      atomic rename each) after it: a visible feed partition only
-      //      ever holds a COMMITTED batch's COMPLETE changes. The staged
-      //      dirs are cleared before the write (files of a failed earlier
-      //      attempt of this batch); after it, any staged file that no
-      //      successful task reported (a failed or superseded task
-      //      attempt) is deleted, and a feed that got no rows still gets
-      //      its empty dir, so every applied batch publishes a partition.
-      //      The commit-landed/publish-missing crash window is healed by
-      //      the batch's retry (the fence path above, reached via
-      //      Replay's fenced branch) with the same rename — a metadata
-      //      op on the staged content, never a recomputation.
-      val conf = table.spark.sparkContext.hadoopConfiguration
-      outs.tail.foreach { o =>
-        val d = new org.apache.hadoop.fs.Path(o.dir)
-        d.getFileSystem(conf).delete(d, true)
-      }
+      // ---- ONE commit: the data files and both feeds' file sets become
+      //      visible together. A failed or superseded task attempt's
+      //      files are in no set, and a feed that got no rows still
+      //      records its (empty) set, so coverage sees the batch.
       val written = graft.lake.TaskWriter.write(
         if (aligned) rows else rows.repartition(col("bucket")), outs)
-      outs.indices.tail.foreach { k =>
-        graft.lake.TaskWriter.keepOnlyReported(conf, outs(k).dir, written.filter(_.kind == k))
-      }
       val files = written.filter(_.kind == 0).map(w => table.dataFile(w, snap.schemaId)
         .copy(delta = deltaBuckets(w.bucket)))
-      val committed = table.commit(files, cowBuckets, batchId, watermarks, lineage, snap.version)
-      // replace: this process just committed batchId, so the staged dir
-      // is authoritative — a pre-existing final partition is a stale
-      // orphan of an interrupted rollback and must not win
-      if (changelog) publishChangelog(table, batchId, replace = true)
-      if (images) publishDeltaFeed(table, batchId, replace = true)
-      committed
+      val feedSets = feeds.zipWithIndex.map { case (kind, i) => LakeTable.FeedSet(kind, batchId, batchId,
+        snap.schemaId, written.filter(_.kind == i + 1).map(w => table.relative(w.path))) }
+      table.commit(files, cowBuckets, batchId, watermarks, lineage, snap.version, newFeeds = feedSets)
     } finally canonical.unpersist(false)
   }
 }

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
  *
  *   - **Pure-feed (preferred)**: when the table was replayed with
  *     `changelog = true, preimages = true`, every applied batch also
- *     published SIGNED pre/post-image rows
+ *     committed SIGNED pre/post-image rows
  *     ([[LakeTable.readDeltaChanges]]). The per-group delta is then ONE
- *     aggregation of the feed partitions in `(synced, current]` —
+ *     aggregation of the feed sets in `(synced, current]` —
  *     ZERO table reads, no key-set materialization, no snapshot joins.
  *     The telescoping algebra: each batch's signed rows sum to (state
  *     after − state before), so the range sums to exactly the state
@@ -194,8 +194,8 @@ object Ivm {
     * — plus a release hook for the fallback's persisted key set. A
     * feed hole past the retention cutoff behaves identically on both
     * paths (silent miss — the documented consumer-lag contract), so
-    * coverage is exactly [[LakeTable.deltaFeedCovers]]'s listing test:
-    * delta partitions for the same batch ids the main feed has. */
+    * coverage is exactly [[LakeTable.deltaFeedCovers]]'s metadata
+    * test: delta feed sets for the same batch ids the main feed has. */
   private def deltaRows(table: LakeTable, m: Meta, cur: LakeTable.Snapshot,
       grp: String, sumCol: String, keyLookupMax: Int): (DataFrame, () => Unit) = {
     // every feed read is fenced at the pinned `cur`: a batch committed

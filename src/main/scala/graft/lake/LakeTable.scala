@@ -19,11 +19,14 @@ import org.json4s.jackson.JsonMethods
  *     snapshots/v00000001.json   -- immutable snapshot descriptors
  *     manifests/m-<uuid>.json    -- immutable per-commit delta manifests
  *     data/c-<uuid>/bucket=K/<uuid>.parquet
+ *     changelog/c-<uuid>/<uuid>.parquet        -- change-feed files (opt-in)
+ *     changelog_delta/c-<uuid>/<uuid>.parquet  -- pre-image feed files (opt-in)
  *
  * A snapshot records: schema history (schema-id chain, additive
  * evolution only), an ORDERED MANIFEST LIST (each manifest is one
  * commit's delta: the data files it added, with bucket + row count +
- * lsn min/max stats, plus the bucket set it replaced), a summary (last
+ * lsn min/max stats, the bucket set it replaced, and the feed sets it
+ * recorded — see [[LakeTable.FeedSet]]), a summary (last
  * applied streaming batch-id, per-shard lsn high-watermarks) and
  * per-partition lineage entries (source offset range -> this snapshot
  * id). The live file set is the left fold of the manifest list: drop
@@ -36,15 +39,17 @@ import org.json4s.jackson.JsonMethods
  * ONE consolidated manifest — amortized O(table files /
  * CompactManifestsAt) per commit, and the descriptor stays bounded.
  *
- * Commit protocol: data files and the delta manifest land under fresh
- * names first; the commit point is publishing descriptor `v<N+1>` with
- * [[Commit.publish]] (temp file, then one exclusive link or rename —
+ * Commit protocol: data files, feed files and the delta manifest land
+ * under fresh names first; the commit point is publishing descriptor
+ * `v<N+1>` with [[Commit.publish]] (temp file, then one exclusive link
+ * or rename —
  * the reference's temp-then-rename output, DataX
  * `hdfswriter/.../HdfsWriter.java:193-194` + `HdfsHelper.renameFile:207-233`,
  * made exclusive). Readers list `snapshots/` and take the max version,
  * so a crash mid-commit leaves only ignored `.tmp` files and orphan data
- * files (cleaned by `vacuum()`); of any number of committers racing to
- * the same version exactly one wins, the rest fail loudly.
+ * and feed files (cleaned by `vacuum()`); of any number of committers
+ * racing to the same version exactly one wins, the rest fail loudly. A
+ * batch's feed rows are therefore visible exactly when its data is.
  *
  * Row-level upserts/deletes are copy-on-write at hash-bucket granularity:
  * the table is bucketed by `pmod(xxhash64(doc_id), nBuckets)`; a MERGE
@@ -66,7 +71,9 @@ object LakeTable {
   val DeletedCol = "_deleted"
 
   /** Table-format identity stamped into every snapshot descriptor.
-    * Version 3 = manifest-list descriptors; version 2 = inline file
+    * Version 4 = manifests carry the feed sets (a version-3 build would
+    * read such a table's feeds as empty); version 3 = manifest-list
+    * descriptors; version 2 = inline file
     * lists (still readable — the data layout and bucket function are
     * unchanged, so a v2 table loads as legacy and upgrades itself on
     * its next commit). Snapshots written before stamping existed parse
@@ -76,26 +83,20 @@ object LakeTable {
     * because a table bucketed by a different hash silently mis-buckets
     * (merges read the wrong base files, compact() rewrites the wrong
     * buckets). */
-  val FormatVersion = 3
+  val FormatVersion = 4
   val BucketFn = "murmur3_pmod" // Spark hash() = Murmur3_x86_32 seed 42, pmod nBuckets
 
   /** Manifest-list length that triggers consolidation at commit. */
   val CompactManifestsAt = 16
 
-  /** Subdirectory holding the opt-in change-data feed (one
-    * `batch_id=N/` parquet partition per applied micro-batch — see
-    * [[graft.apply.BatchApply]] `changelog`). */
+  /** Subdirectory holding the opt-in change-data feed's files: the
+    * canonical per-key changes of each applied batch (see
+    * [[graft.apply.BatchApply]] `changelog`), listed by the snapshot's
+    * [[FeedSet]]s of this kind. */
   val ChangelogDir = "changelog"
 
-  /** Ranged (compacted) feed-store dir-name prefix under changelog/:
-    * `.ranged-<loBatchId>-<hiBatchId>`. Dot-prefixed so the per-batch
-    * partitioned parquet read never sees it (see
-    * [[LakeTable.compactChangelog]]). */
-  val RangedFeedPrefix = ".ranged-"
-
-  /** Subdirectory holding the opt-in PRE-IMAGE DELTA feed (one
-    * `batch_id=N/` parquet partition per applied micro-batch, written
-    * only with `changelog = true, preimages = true` — see
+  /** Subdirectory holding the opt-in PRE-IMAGE DELTA feed's files
+    * (written only with `changelog = true, preimages = true` — see
     * [[graft.apply.BatchApply]]): signed state-change rows that make a
     * downstream aggregate's delta computable from the feed ALONE
     * (sign=-1 carries the pre-image of a row an applied change
@@ -108,44 +109,29 @@ object LakeTable {
     * 40-133`), which likewise replays old cell values. */
   val DeltaFeedDir = "changelog_delta"
 
-  /** Columns of [[LakeTable.readChanges]] rows: the canonical change's
-    * payload, `shard`, and the `batch_id` partition column, last. The
-    * payload takes the table's own types ([[changeFeedSchemaOf]]); this
-    * is the shape of a feed with no published batch yet. */
-  val changeFeedSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", StringType), StructField("op", StringType),
-      StructField("lsn", LongType), StructField("tokens", ArrayType(IntegerType)),
-      StructField("n_tok", LongType), StructField("source", StringType),
-      StructField("lang", StringType), StructField("shard", IntegerType),
-      StructField("batch_id", IntegerType)))
+  /** Schema of [[LakeTable.readChanges]] rows for a table whose user
+    * schema is `user`: the key, `op`, `lsn`, every other user column at
+    * the table's type, `shard`, and `batch_id`, last. */
+  def changeFeedSchema(user: StructType): StructType =
+    feedSchema(user, Seq(StructField("op", StringType), StructField("lsn", LongType)),
+      Seq(StructField("shard", IntegerType)))
+
+  /** Schema of [[LakeTable.readDeltaChanges]] rows: the key, a signed
+    * contribution marker, `lsn`, every other user column, `batch_id`. */
+  def deltaFeedSchema(user: StructType): StructType =
+    feedSchema(user, Seq(StructField("sign", IntegerType), StructField("lsn", LongType)), Nil)
+
+  /** Feed file and read schemas are one: `batch_id` is a data column of
+    * every feed file, and every field is nullable. A file is read at
+    * the schema of the table version that wrote it, then aligned to the
+    * current one, like a data file. */
+  private def feedSchema(user: StructType, head: Seq[StructField], tail: Seq[StructField]): StructType = {
+    val (key, payload) = user.fields.toSeq.partition(_.name == "doc_id")
+    asNullable(StructType((key ++ head ++ payload ++ tail) :+ StructField("batch_id", IntegerType)))
   }
 
-  /** The change feed's file and read schema for a table whose user
-    * schema is `user`: [[changeFeedSchema]] with each payload column at
-    * the table's type (a long-keyed table keeps long keys; `lang` stays
-    * a string until the table evolves to carry it), all nullable.
-    * [[graft.apply.BatchApply]] writes the feed at the applying
-    * snapshot's schema and every read passes the current one, so no
-    * read infers a schema, and a column an evolution widened (int
-    * `n_tok` to long) widens on read. */
-  def changeFeedSchemaOf(user: StructType): StructType = asNullable(StructType(
-    changeFeedSchema.fields.map(f => user.find(_.name == f.name).fold(f)(u => f.copy(dataType = u.dataType)))))
-
-  /** Schema of [[LakeTable.readDeltaChanges]] rows: the payload columns
-    * at the table's EVOLVED shape (n_tok already widened, lang present
-    * — pre-images of pre-evolution rows carry null lang), a signed
-    * contribution marker, and the `batch_id` partition column. */
-  val deltaFeedSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", StringType), StructField("sign", IntegerType),
-      StructField("lsn", LongType), StructField("tokens", ArrayType(IntegerType)),
-      StructField("n_tok", LongType), StructField("source", StringType),
-      StructField("lang", StringType),
-      StructField("batch_id", IntegerType)))
-  }
+  private def feedSchemaOf(kind: String): StructType => StructType =
+    if (kind == ChangelogDir) changeFeedSchema else deltaFeedSchema
 
   /** `delta=true` marks a merge-on-read file: its rows OVERLAY the
     * bucket's base rows, resolved at read time by max `_lsn` per key
@@ -154,6 +140,14 @@ object LakeTable {
       schemaId: Int, delta: Boolean = false)
 
   final case class LineageEntry(batchId: Long, shard: Int, minLsn: Long, maxLsn: Long, rows: Long)
+
+  /** The feed files one commit recorded: `kind` is the feed's dir
+    * ([[ChangelogDir]] or [[DeltaFeedDir]]), and `files` hold the rows
+    * of batches `fromBatch..toBatch` — one applied batch, or a range
+    * [[LakeTable.compactChangelog]] merged — written at `schemaId`. A
+    * set with no files still records that the batch's feed was on. */
+  final case class FeedSet(kind: String, fromBatch: Long, toBatch: Long, schemaId: Int,
+      files: Seq[String])
 
   final case class Snapshot(
       version: Long,
@@ -165,7 +159,8 @@ object LakeTable {
       batchId: Long, // last applied streaming batch id (-1 = none)
       watermarks: Map[Int, Long], // shard -> max applied lsn
       lineage: Seq[LineageEntry], // offset ranges this snapshot applied
-      manifests: Seq[String] = Nil) { // ordered delta-manifest paths (v3)
+      manifests: Seq[String] = Nil, // ordered delta-manifest paths (v3)
+      feeds: Seq[FeedSet] = Nil) { // live feed sets (folded from the manifests)
 
     def schema: StructType = schemas(schemaId)
 
@@ -232,19 +227,31 @@ object LakeTable {
       delta = (f \ "delta") match { case JBool(b) => b; case _ => false })
   }
 
-  /** One commit's delta: files it added + buckets it replaced. The live
-    * file set of a snapshot is the in-order fold of its manifests. */
-  private[lake] final case class Manifest(added: Seq[DataFile], replacedBuckets: Set[Int])
+  /** One commit's delta: files it added, buckets it replaced and feed
+    * sets it added. The live file set of a snapshot is the in-order
+    * fold of its manifests; its feed sets are their concatenation (a
+    * commit that drops feed sets writes one consolidated manifest). */
+  private[lake] final case class Manifest(added: Seq[DataFile], replacedBuckets: Set[Int],
+      feeds: Seq[FeedSet] = Nil)
 
   private[lake] def manifestToJson(m: Manifest): JValue = JObject(
     "added" -> JArray(m.added.toList.map(fileToJson)),
-    "replacedBuckets" -> JArray(m.replacedBuckets.toList.sorted.map(b => JInt(b))))
+    "replacedBuckets" -> JArray(m.replacedBuckets.toList.sorted.map(b => JInt(b))),
+    "feeds" -> JArray(m.feeds.toList.map(f => JObject(
+      "kind" -> JString(f.kind), "fromBatch" -> JLong(f.fromBatch), "toBatch" -> JLong(f.toBatch),
+      "schemaId" -> JInt(f.schemaId), "files" -> JArray(f.files.toList.map(JString(_)))))))
 
   private[lake] def manifestFromJson(j: JValue): Manifest = {
     implicit val fmts: Formats = DefaultFormats
     Manifest(
       (j \ "added").asInstanceOf[JArray].arr.map(fileFromJson),
-      (j \ "replacedBuckets").asInstanceOf[JArray].arr.map(_.extract[Int]).toSet)
+      (j \ "replacedBuckets").asInstanceOf[JArray].arr.map(_.extract[Int]).toSet,
+      (j \ "feeds") match {
+        case JArray(fs) => fs.map(f => FeedSet((f \ "kind").extract[String],
+          (f \ "fromBatch").extract[Long], (f \ "toBatch").extract[Long],
+          (f \ "schemaId").extract[Int], (f \ "files").extract[List[String]]))
+        case _ => Nil
+      })
   }
 
   private[lake] def foldManifests(ms: Seq[Manifest]): Seq[DataFile] =
@@ -387,7 +394,10 @@ class LakeTable(val spark: SparkSession, val root: String) {
     // set (v2/legacy descriptors carried the files inline)
     val snap =
       if (parsed.manifests.isEmpty) parsed
-      else parsed.copy(files = foldManifests(parsed.manifests.map(readManifest)))
+      else {
+        val ms = parsed.manifests.map(readManifest)
+        parsed.copy(files = foldManifests(ms), feeds = ms.flatMap(_.feeds))
+      }
     cachePut(v, snap)
   }
 
@@ -422,11 +432,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
       case None => s.files
     }
     val targetPhys = s.physicalSchema(s.schemaId)
-    if (files.isEmpty) {
-      // LocalRelation-backed empty frame (not an empty RDD): keeps the
-      // plan codegen- and AQE-friendly when joined against
-      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), targetPhys)
-    } else {
+    if (files.isEmpty) emptyFrame(targetPhys)
+    else {
       // group by schema-id; align older files to the current schema:
       // missing columns -> null, widened columns -> cast (additive only)
       files.groupBy(_.schemaId).map { case (sid, fl) =>
@@ -537,7 +544,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
   /** INCREMENTAL CHANGE READ — the table as a CDC *source* (the Delta
     * CDF / Iceberg incremental-scan analog, and the composability story
     * of the reference's `otsstreamreader`: a downstream job can tail
-    * THIS table's changes the way this engine tails its upstream log).
+    * THIS table's changes the way this engine tails its upstream log —
+    * [[graft.stream.Replay]] does, given a table root as its input).
     * Returns the canonical per-key changes of every batch in
     * `(sinceBatchId, untilBatchId]`: one row per (batch_id, doc_id)
     * with op I/U/D, lsn, and the payload columns — exactly what
@@ -546,57 +554,26 @@ class LakeTable(val spark: SparkSession, val root: String) {
     *
     * Requires the feed to have been enabled at write time
     * (`changelog = true` — writing change files costs one extra
-    * O(batch) parquet write per commit; diffing COW snapshots after the
-    * fact would cost O(table)). Reads prune to the requested batch_id
-    * partitions. Feed partitions are STAGED (hidden dot-dir) before
-    * the snapshot commit and PUBLISHED with one atomic rename after it
-    * (fenced retries re-run the rename — see [[graft.apply.BatchApply
-    * .publishChangelog]]), so a visible partition only ever holds a
-    * committed batch's complete changes. `untilBatchId` is the upper
+    * O(batch) parquet output per commit; diffing COW snapshots after
+    * the fact would cost O(table)). The files read are those of the
+    * current snapshot's change [[FeedSet]]s in range, chosen from
+    * metadata alone: a batch's feed files are recorded by the same
+    * commit as its data files, so they are visible exactly when the
+    * batch is, and nothing is listed. `untilBatchId` is the upper
     * fence: a consumer pins it from the snapshot it reads against, so
-    * a batch committed while it reads is left to its next read; the
-    * default, the current batch, also keeps out foreign files dropped
-    * into the directory. */
+    * a batch committed while it reads is left to its next read. The
+    * schema is [[changeFeedSchema]] of the current schema, whether or
+    * not any batch is in range. */
   def readChanges(sinceBatchId: Long = -1L,
       untilBatchId: Long = current.batchId): DataFrame = {
     requireChangelog()
-    val dir = new Path(root, ChangelogDir)
-    val cols = LakeTable.changeFeedSchema.fieldNames.map(col).toIndexedSeq
-    // Compacted history ([[compactChangelog]]): at most one LIVE ranged
-    // store — the max-hi dir (every compaction subsumes all earlier
-    // ranged dirs, so lower-hi dirs are crash debris, as are batch_id=
-    // partitions it covers: compaction deletes them after the ranged
-    // rename, and a crash between the two leaves both readable — the
-    // covered-id filter keeps the read exactly-once either way).
-    val ranged = rangedFeedDirs().lastOption
-    val coveredHi = ranged.map(_._2).getOrElse(-1L)
-    val hasParts = fs.listStatus(dir).exists { st =>
-      val n = st.getPath.getName
-      n.startsWith("batch_id=") && n.stripPrefix("batch_id=").toLong > coveredHi
-    }
-    // A feed dir with no PUBLISHED batch_id= partition yet (e.g. crash
-    // after staging but before the first commit leaves only a
-    // .staged- dot-dir) reads as an empty frame with the feed schema —
-    // the same thing a polling tailer would see one instant before the
-    // first publish. Explicit schema: no footer-inference job per read.
-    val parts =
-      if (!hasParts) None
-      else Some(spark.read.schema(changeFeedSchemaOf(current.schema))
-        .option("basePath", dir.toString).parquet(dir.toString)
-        .filter(col("batch_id") > coveredHi).select(cols: _*))
-    val rangedDf = ranged.map { case (_, _, p) =>
-      spark.read.schema(changeFeedSchemaOf(current.schema)).parquet(p.toString).select(cols: _*)
-    }
-    val all = (rangedDf.toSeq ++ parts.toSeq).reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LakeTable.changeFeedSchema))
-    all.filter(col("batch_id") > sinceBatchId && col("batch_id") <= untilBatchId)
+    readFeed(current, ChangelogDir, sinceBatchId, untilBatchId)
   }
 
   /** The curated error for a feed read on a table replayed without
     * `changelog = true`. */
   private[graft] def requireChangelog(): Unit =
-    require(fs.exists(new Path(root, ChangelogDir)),
+    require(current.feeds.exists(_.kind == ChangelogDir) || fs.exists(new Path(root, ChangelogDir)),
       s"no changelog under $root — replay with changelog=true to enable the change feed")
 
   /** PRE-IMAGE DELTA READ — signed state-change rows of every batch in
@@ -606,168 +583,92 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * batch) − (state before batch), so summing the range gives the
     * state delta between the two batch fences — stale changes that
     * lost the lsn merge emit nothing and self-cancelling flip-flops
-    * telescope away. Same staged/publish/fence discipline as
+    * telescope away. Same feed-set selection and fence as
     * [[readChanges]]. Check [[deltaFeedCovers]] before relying on it:
     * the feed is opt-in per batch, and a range with holes must fall
     * back to the snapshot-diff path. */
   def readDeltaChanges(sinceBatchId: Long = -1L,
-      untilBatchId: Long = current.batchId): DataFrame = {
-    val dir = new Path(root, LakeTable.DeltaFeedDir)
-    val cols = LakeTable.deltaFeedSchema.fieldNames.map(col).toIndexedSeq
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LakeTable.deltaFeedSchema)
-    if (!fs.exists(dir) ||
-      !fs.listStatus(dir).exists(_.getPath.getName.startsWith("batch_id=")))
-      return empty
-    // explicit schema: skips the footer-merge schema inference over
-    // every partition — the fixed cost that would grow with feed age
-    spark.read.schema(LakeTable.deltaFeedSchema)
-      .option("basePath", dir.toString).parquet(dir.toString)
-      .select(cols: _*)
-      .filter(col("batch_id") > sinceBatchId && col("batch_id") <= untilBatchId)
-  }
-
-  /** Published batch ids under a feed dir (driver listing, O(dirs)). */
-  private def feedBatchIds(dirName: String): Set[Long] = {
-    val dir = new Path(root, dirName)
-    if (!fs.exists(dir)) return Set.empty
-    fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).toSet
-  }
+      untilBatchId: Long = current.batchId): DataFrame =
+    readFeed(current, DeltaFeedDir, sinceBatchId, untilBatchId)
 
   /** Does the pre-image delta feed cover every applied batch in
-    * `(sinceBatchId, untilBatchId]`? True when the delta feed has a
-    * partition for exactly the batches the MAIN feed has in range (the
-    * main feed writes one partition per applied batch whenever the
-    * changelog is on — which [[graft.lake.Ivm]] requires anyway) and
-    * none of the range is buried in a compacted ranged store (whose
-    * per-batch dirs are gone — enumeration would be O(rows)). */
+    * `(sinceBatchId, untilBatchId]`? True when the snapshot holds a
+    * delta feed set for exactly the batches it holds change feed sets
+    * for in range (the change feed records every batch applied with
+    * the changelog on, which [[graft.lake.Ivm]] requires anyway) and
+    * none of the range is in a compacted change set (which no longer
+    * says which batches it holds). Metadata only. */
   def deltaFeedCovers(sinceBatchId: Long,
       untilBatchId: Long = current.batchId): Boolean = {
-    val coveredHi = rangedFeedDirs().lastOption.map(_._2).getOrElse(-1L)
-    if (coveredHi > sinceBatchId) return false
-    val inRange = (b: Long) => b > sinceBatchId && b <= untilBatchId
-    val main = feedBatchIds(ChangelogDir).filter(inRange)
-    val delta = feedBatchIds(LakeTable.DeltaFeedDir).filter(inRange)
-    main == delta
+    val s = current
+    val main = feedSets(s, ChangelogDir, sinceBatchId, untilBatchId)
+    main.forall(f => f.fromBatch == f.toBatch) && main.map(_.toBatch).toSet ==
+      feedSets(s, DeltaFeedDir, sinceBatchId, untilBatchId).map(_.toBatch).toSet
   }
 
-  /** Ranged feed stores under changelog/ — `.ranged-<lo>-<hi>` dot-dirs
-    * (hidden from the partitioned parquet read), sorted by (hi, lo):
-    * the LAST entry is the live store. Driver-side listing of one
-    * directory — O(dirs), bounded by compaction itself. */
-  private def rangedFeedDirs(): Seq[(Long, Long, Path)] = {
-    val dir = new Path(root, ChangelogDir)
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (!n.startsWith(LakeTable.RangedFeedPrefix)) None
-      else n.stripPrefix(LakeTable.RangedFeedPrefix).split("-") match {
-        case Array(lo, hi) => Some((lo.toLong, hi.toLong, st.getPath))
-        case _ => None
-      }
-      // ties on hi prefer the LARGER lo: a crashed retention rewrite
-      // leaves old (lo, hi) beside new (cutoff+1, hi) — the rewritten
-      // store must win so the expired rows stay expired
-    }.sortBy { case (lo, hi, _) => (hi, lo) }
+  private def feedSets(s: Snapshot, kind: String, since: Long, until: Long): Seq[FeedSet] =
+    s.feeds.filter(f => f.kind == kind && f.toBatch > since && f.fromBatch <= until)
+
+  /** Rows of the `kind` feed in `(since, until]` at snapshot `s`'s feed
+    * schema. Rows are filtered by `batch_id` only when a compacted set
+    * straddles the range: a per-batch set is in or out by its metadata,
+    * so the usual read compiles no per-call literal. */
+  private def readFeed(s: Snapshot, kind: String, since: Long, until: Long): DataFrame = {
+    val sets = feedSets(s, kind, since, until)
+    val rows = readSets(s, kind, sets)
+    if (sets.forall(f => f.fromBatch > since && f.toBatch <= until)) rows
+    else rows.filter(col("batch_id") > since && col("batch_id") <= until)
   }
 
-  /** FEED COMPACTION — coalesce per-batch change-feed partitions into
-    * one ranged store so a long-retention feed stays readable (one
-    * micro-batch per minute = ~1,440 partition dirs/day; the per-batch
-    * layout is write-optimal but listing- and open-cost-pathological
-    * for a tailer reading weeks of history). All published partitions
-    * with `batch_id <= current.batchId - retainRecent`, PLUS the
-    * previous ranged store, rewrite into `changelog/.ranged-<lo>-<hi>`
-    * — batch_id carried as a DATA column, rows range-clustered by
-    * (batch_id, doc_id) so an incremental `readChanges(since)` prunes
-    * at parquet row-group granularity instead of by directory. The
-    * newest `retainRecent` batches stay per-batch partitions (they are
-    * what live tailers poll; compacting them would rewrite hot data).
-    *
-    * Crash-safe like every commit here: the new store is written to a
-    * `.tmp-` dir and RENAMED live before any deletion; each compaction
-    * subsumes all earlier ranged stores, so [[readChanges]]'s max-hi
-    * rule reads exactly-once through any crash window, and the next
-    * compaction (or [[vacuum]]) clears leftover covered partitions and
-    * superseded ranged dirs. Stale staged partitions below the applied
-    * watermark are HEALED first (same rule as [[vacuum]]) so a
-    * committed-but-unpublished batch is compacted, never skipped.
-    * Single-writer with the replay's maintenance window, like
-    * [[compact]]. No-op when nothing new is eligible. */
+  /** Every row of `sets`: one scan per schema id their files were
+    * written at, aligned to `s`'s feed schema (no footer inference). */
+  private def readSets(s: Snapshot, kind: String, sets: Seq[FeedSet]): DataFrame = {
+    val schemaOf = feedSchemaOf(kind)
+    val target = schemaOf(s.schema)
+    sets.filter(_.files.nonEmpty).groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (sid, fl) =>
+      align(spark.read.schema(schemaOf(s.schemas(sid))).parquet(fl.flatMap(_.files).map(f => s"$root/$f"): _*),
+        target)
+    }.reduceOption(_ unionByName _).getOrElse(emptyFrame(target))
+  }
+
+  /** LocalRelation-backed empty frame (not an empty RDD): keeps a plan
+    * that joins against it codegen- and AQE-friendly. */
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
+  /** FEED COMPACTION — merge the change feed's sets of batches at or
+    * below `current.batchId - retainRecent` into one set, so a
+    * long-retention feed stays cheap to open (one micro-batch per
+    * minute is ~1,440 sets a day; the per-batch layout is write-optimal
+    * but open-cost-pathological for a tailer reading weeks of history).
+    * The merged rows are range-clustered by (batch_id, doc_id), so an
+    * incremental `readChanges(since)` through the merged set prunes at
+    * parquet row-group granularity. The newest `retainRecent` batches
+    * stay per-batch sets (they are what live tailers poll). The
+    * replacement is a commit, like [[compact]]'s: the old sets' files
+    * stay for the snapshots that still reference them, and [[vacuum]]
+    * removes them once none does. Single-writer with the replay's
+    * maintenance window. No-op when fewer than two sets are eligible. */
   def compactChangelog(retainRecent: Int = 1): Unit = {
     require(retainRecent >= 0, s"compactChangelog retainRecent=$retainRecent must be >= 0")
-    val dir = new Path(root, ChangelogDir)
-    if (!fs.exists(dir)) return
-    val applied = current.batchId
-    healStagedChangelog(applied, keepBelow = Long.MinValue)
-    val prior = rangedFeedDirs()
-    val priorHi = prior.lastOption.map(_._2).getOrElse(-1L)
-    val cutoff = applied - retainRecent
-    val parts = fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong)
-      .filter(b => b > priorHi && b <= cutoff)
-      .sorted
-    if (parts.isEmpty) return
-    val lo = prior.lastOption.map(_._1).getOrElse(parts.head)
-    val hi = parts.max
-    val cols = LakeTable.changeFeedSchema.fieldNames.map(col).toIndexedSeq
-    val feedSchema = changeFeedSchemaOf(current.schema)
-    val fresh = spark.read.schema(feedSchema)
-      .option("basePath", dir.toString).parquet(dir.toString)
-      .filter(col("batch_id") > priorHi && col("batch_id") <= cutoff).select(cols: _*)
-    val all = prior.lastOption match {
-      case Some((_, _, p)) =>
-        spark.read.schema(feedSchema).parquet(p.toString).select(cols: _*).unionByName(fresh)
-      case None => fresh
-    }
-    val tmp = new Path(dir, s".tmp${LakeTable.RangedFeedPrefix}$lo-$hi")
-    val live = new Path(dir, s"${LakeTable.RangedFeedPrefix}$lo-$hi")
-    fs.delete(tmp, true)
-    // range-cluster, don't partition: ONE store, file count bounded by
-    // the shuffle parallelism per compaction (and re-bounded every run
-    // since each compaction rewrites the whole store)
-    all.repartitionByRange(col("batch_id"), col("doc_id"))
-      .sortWithinPartitions(col("batch_id"), col("doc_id"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(tmp, live))
-      throw new IllegalStateException(s"feed compaction rename failed for $live")
-    // now superseded: earlier ranged stores and the covered partitions
-    prior.foreach { case (_, _, p) => fs.delete(p, true) }
-    fs.listStatus(dir).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch_id=") && n.stripPrefix("batch_id=").toLong <= hi)
-        fs.delete(st.getPath, true)
-    }
+    val s = current
+    val old = s.feeds.filter(f => f.kind == ChangelogDir && f.toBatch <= s.batchId - retainRecent)
+    if (old.size < 2) return
+    val merged = writeFeedSet(s, ChangelogDir, old.map(_.fromBatch).min, old.map(_.toBatch).max,
+      readSets(s, ChangelogDir, old))
+    commit(Nil, Set.empty, s.batchId, Map.empty, Nil, s.version,
+      newFeeds = Seq(merged), keepFeed = f => !old.contains(f))
   }
 
-  /** Publish (heal) stale staged feed partitions at or below `applied`
-    * whose final partition is missing — the commit-landed/publish-
-    * missing crash window; the staged dir is the only copy of that
-    * committed batch's changes, so it must be renamed live, never
-    * deleted. Staged dirs below `keepBelow` (expired or already
-    * compacted) and those whose final partition exists (republish-race
-    * leftovers) are debris and are removed instead. */
-  private def healStagedChangelog(applied: Long, keepBelow: Long): Unit = {
-    val clDir = new Path(root, ChangelogDir)
-    if (!fs.exists(clDir)) return
-    val coveredHi = rangedFeedDirs().lastOption.map(_._2).getOrElse(-1L)
-    fs.listStatus(clDir).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".staged-batch_id=")) {
-        val b = n.stripPrefix(".staged-batch_id=").toLong
-        if (b <= applied) {
-          val fin = new Path(clDir, s"batch_id=$b")
-          if (b < keepBelow || b <= coveredHi || fs.exists(fin)) fs.delete(st.getPath, true)
-          else if (!fs.rename(st.getPath, fin))
-            throw new IllegalStateException(
-              s"changelog publish-heal rename failed for batch $b")
-        }
-      }
-    }
+  /** Write `rows` (feed rows, `batch_id` included) as the `kind` set of
+    * batches `from..to`, range-clustered by (batch_id, doc_id), under a
+    * fresh commit dir like any data write. */
+  private def writeFeedSet(s: Snapshot, kind: String, from: Long, to: Long, rows: DataFrame): FeedSet = {
+    val out = TaskWriter.Out(s"$root/$kind/c-${UUID.randomUUID()}", feedSchemaOf(kind)(s.schema))
+    val tagged = rows.select(lit(0).as("kind"), lit(-1).as("bucket"),
+      struct(col("batch_id"), col("doc_id")).as("key"), struct(out.schema.fieldNames.toIndexedSeq.map(col): _*))
+    val files = TaskWriter.write(tagged.repartitionByRange(col("batch_id"), col("doc_id")), IndexedSeq(out))
+    FeedSet(kind, from, to, s.schemaId, files.map(w => relative(w.path)))
   }
 
   // --------------------------------------------------------------- write
@@ -808,12 +709,24 @@ class LakeTable(val spark: SparkSession, val root: String) {
 
   /** The manifest entry of a data file a task wrote under [[dataOut]]. */
   private[graft] def dataFile(w: TaskWriter.Written, schemaId: Int): DataFile =
-    DataFile(w.path.stripPrefix(s"$root/"), w.bucket, w.rows, w.minLsn, w.maxLsn, schemaId)
+    DataFile(relative(w.path), w.bucket, w.rows, w.minLsn, w.maxLsn, schemaId)
+
+  /** The output of one write of the `kind` feed for `batchId`, at the
+    * feed schema of `user`, under a fresh commit dir like [[dataOut]].
+    * The tasks fill in `batch_id`, so its value never enters generated
+    * code. */
+  private[graft] def feedOut(kind: String, user: StructType, batchId: Long): TaskWriter.Out =
+    TaskWriter.Out(s"$root/$kind/c-${UUID.randomUUID()}", feedSchemaOf(kind)(user),
+      constants = Seq(batchId.toInt))
+
+  /** A path under the root as the manifests record it. */
+  private[graft] def relative(path: String): String = path.stripPrefix(s"$root/")
 
   /** Publish a new snapshot: replace all files of `replacedBuckets` with
-    * `newFiles`, advance batch/watermark/lineage metadata. Retries are the
-    * caller's concern (single-writer pipelines never race). Returns the
-    * committed snapshot. */
+    * `newFiles`, keep the feed sets `keepFeed` accepts and add
+    * `newFeeds`, advance batch/watermark/lineage metadata. Retries are
+    * the caller's concern (single-writer pipelines never race). Returns
+    * the committed snapshot. */
   def commit(
       newFiles: Seq[DataFile],
       replacedBuckets: Set[Int],
@@ -821,7 +734,9 @@ class LakeTable(val spark: SparkSession, val root: String) {
       newWatermarks: Map[Int, Long],
       lineage: Seq[LineageEntry],
       expectedVersion: Long,
-      newNBuckets: Option[Int] = None): Snapshot = {
+      newNBuckets: Option[Int] = None,
+      newFeeds: Seq[FeedSet] = Nil,
+      keepFeed: FeedSet => Boolean = _ => true): Snapshot = {
     val s = snapshotAt(expectedVersion)
     if (currentVersion != expectedVersion)
       throw new IllegalStateException(s"concurrent commit: expected v$expectedVersion, found v$currentVersion")
@@ -829,22 +744,25 @@ class LakeTable(val spark: SparkSession, val root: String) {
     require(newNBuckets.isEmpty || kept.isEmpty,
       "bucket-count change requires replacing every existing file (full rewrite)")
     val allFiles = kept ++ newFiles
+    val keptFeeds = s.feeds.filter(keepFeed)
+    val allFeeds = keptFeeds ++ newFeeds
     // metadata cost per commit = ONE delta manifest of O(batch files);
     // the manifest list is consolidated once it exceeds the threshold
-    // (amortized O(table files / CompactManifestsAt) per commit)
+    // (amortized O(table files / CompactManifestsAt) per commit), on a
+    // legacy (inline-file) parent (its self-upgrade), and when feed
+    // sets are dropped (manifests only ever add feed sets)
     val nextManifests =
-      if (s.manifests.isEmpty && s.files.nonEmpty)
-        // legacy (inline-file) parent: self-upgrade with one consolidated manifest
-        Seq(writeManifest(Manifest(allFiles, Set.empty)))
-      else if (s.manifests.size + 1 > CompactManifestsAt)
-        Seq(writeManifest(Manifest(allFiles, Set.empty)))
+      if ((s.manifests.isEmpty && s.files.nonEmpty) || s.manifests.size + 1 > CompactManifestsAt ||
+        keptFeeds.size < s.feeds.size)
+        Seq(writeManifest(Manifest(allFiles, Set.empty, allFeeds)))
       else
-        s.manifests :+ writeManifest(Manifest(newFiles, replacedBuckets))
+        s.manifests :+ writeManifest(Manifest(newFiles, replacedBuckets, newFeeds))
     val next = s.copy(
       version = s.version + 1,
       parent = s.version,
       nBuckets = newNBuckets.getOrElse(s.nBuckets),
       files = allFiles,
+      feeds = allFeeds,
       batchId = batchId,
       watermarks = s.watermarks ++ newWatermarks.map { case (k, v) =>
         k -> math.max(v, s.watermarks.getOrElse(k, Long.MinValue))
@@ -942,52 +860,22 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * and a resumed ingest re-applies everything past the reinstated
     * `batchId` — note the STREAM side must be rewound too (a fresh
     * checkpoint dir over a log that still holds those events), exactly
-    * like Iceberg rollback + source rewind.
-    *
-    * Change feed: rows past the reinstated fence are already invisible
-    * (`readChanges` filters `batch_id <= current.batchId`), but the
-    * now-orphaned per-batch partitions must be DELETED so a re-applied
-    * batch republishes cleanly (the publish path otherwise keeps the
-    * stale dir — see [[graft.apply.BatchApply.publishChangelog]]'s
-    * replace flag for the crash-window backstop). A COMPACTED ranged
-    * store spanning the rollback point cannot be split in a
-    * crash-consistent way (its hi feeds the next compaction's resume
-    * point), so that case fails loudly: roll back to a newer version or
-    * expire the feed first. */
+    * like Iceberg rollback + source rewind. The target's manifests
+    * carry its feed sets, so both feeds read exactly as they did at the
+    * target — across a later [[compactChangelog]] too — and a batch
+    * applied again writes its feed files afresh. */
   def rollbackTo(version: Long): Snapshot = {
     val head = current
     if (version == head.version) return head
     require(listVersions.contains(version),
       s"cannot roll back to unknown/expired version $version (retained: ${listVersions.mkString(",")})")
     val tgt = snapshotAt(version)
-    val clDir = new Path(root, ChangelogDir)
-    val hasFeed = fs.exists(clDir)
-    if (hasFeed) {
-      val coveredHi = rangedFeedDirs().lastOption.map(_._2).getOrElse(-1L)
-      require(coveredHi <= tgt.batchId,
-        s"rollback to batch ${tgt.batchId} would split the compacted feed store " +
-          s"(ranged through batch $coveredHi) — roll back to a newer version, or drop the feed")
-    }
     // a legacy (inline-file) target self-upgrades, same as evolveSchema
     val ms = if (tgt.manifests.isEmpty && tgt.files.nonEmpty)
       Seq(writeManifest(Manifest(tgt.files, Set.empty))) else tgt.manifests
     val next = tgt.copy(version = head.version + 1, parent = head.version, manifests = ms)
     if (!writeSnapshot(next)) throw new IllegalStateException("rollback commit race")
     cachePut(next.version, next)
-    // AFTER the commit point: orphaned future feed partitions (a crash
-    // here leaves them — hidden by the read fence, replaced by the
-    // publish path's replace flag when their batch id is re-applied)
-    Seq(clDir, new Path(root, LakeTable.DeltaFeedDir)).foreach { d =>
-      if (fs.exists(d)) fs.listStatus(d).foreach { st =>
-        val n = st.getPath.getName
-        val b =
-          if (n.startsWith("batch_id=")) Some(n.stripPrefix("batch_id=").toLong)
-          else if (n.startsWith(".staged-batch_id=")) Some(n.stripPrefix(".staged-batch_id=").toLong)
-          else None
-        if (b.exists(_ > tgt.batchId)) fs.delete(st.getPath, true)
-      }
-    }
-    next
   }
 
   // ------------------------------------------------------------- maintain
@@ -1015,95 +903,38 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * every `current` call scans — without expiration it grows one
     * descriptor per commit forever), delete manifests no retained
     * snapshot references (expired ones + orphans from lost commit
-    * races), then delete data files no retained snapshot references
-    * (crash debris, superseded COW files) and prune emptied
-    * commit/bucket directories. Time travel remains valid exactly for
-    * the retained snapshots.
+    * races), then delete data and feed files no retained snapshot
+    * references (crash debris, superseded COW files, replaced or
+    * expired feed sets) and prune emptied commit/bucket directories.
+    * Time travel remains valid exactly for the retained snapshots.
     *
-    * `changelogRetainBatches >= 0` additionally expires change-feed
-    * partitions with `batch_id <= current.batchId -
-    * changelogRetainBatches` (the feed otherwise grows one partition
-    * per micro-batch forever). Retention is the downstream-consumer
-    * contract: expire only past the oldest `sinceBatchId` any consumer
-    * may still ask for — an incremental reader requesting an expired
-    * range silently misses those batches, exactly like an expired
-    * Kafka retention window. Default -1 keeps everything. */
+    * `changelogRetainBatches >= 0` first commits the expiry of both
+    * feeds' sets of batches `<= current.batchId -
+    * changelogRetainBatches` (the feeds otherwise grow one set per
+    * micro-batch forever); a compacted set the cutoff falls inside is
+    * rewritten to its retained rows, so retention stays row-exact.
+    * Retention is the downstream-consumer contract: expire only past
+    * the oldest `sinceBatchId` any consumer may still ask for — an
+    * incremental reader requesting an expired range silently misses
+    * those batches, exactly like an expired Kafka retention window.
+    * Default -1 keeps everything. */
   def vacuum(retainLast: Int = 1, changelogRetainBatches: Long = -1L): Unit = {
     require(retainLast >= 1, s"vacuum retainLast=$retainLast must be >= 1")
     if (changelogRetainBatches >= 0) {
-      val clDir = new Path(root, ChangelogDir)
-      if (fs.exists(clDir)) {
-        val applied = current.batchId
-        val cutoff = applied - changelogRetainBatches
-        fs.listStatus(clDir).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("batch_id=") && n.stripPrefix("batch_id=").toLong <= cutoff)
-            fs.delete(st.getPath, true)
-        }
-        // A staged dir at-or-below the applied watermark whose FINAL
-        // partition is missing is the commit-landed/publish-missing
-        // crash window: it is the ONLY copy of that committed batch's
-        // changes, so HEAL it (the same atomic rename as
-        // BatchApply.publishChangelog) rather than delete it — deleting
-        // would leave a permanent hole in the feed. Only when the final
-        // partition already exists (publish ran; this is a republish
-        // race's leftover), the batch is already compacted into the
-        // ranged store, or it is past the retention cutoff (its final
-        // partition was just expired above — resurrecting it would
-        // un-expire the batch) is the staged dir debris.
-        healStagedChangelog(applied, keepBelow = cutoff + 1)
-        // the pre-image delta feed expires on the same cutoff (same
-        // consumer-lag contract; its staged dirs heal with the same
-        // rename — see BatchApply.publishDeltaFeed)
-        val dfDir = new Path(root, LakeTable.DeltaFeedDir)
-        if (fs.exists(dfDir)) fs.listStatus(dfDir).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("batch_id=") && n.stripPrefix("batch_id=").toLong <= cutoff)
-            fs.delete(st.getPath, true)
-          else if (n.startsWith(".staged-batch_id=")) {
-            val b = n.stripPrefix(".staged-batch_id=").toLong
-            val fin = new Path(dfDir, s"batch_id=$b")
-            if (b <= applied) {
-              if (b <= cutoff || fs.exists(fin)) fs.delete(st.getPath, true)
-              else if (!fs.rename(st.getPath, fin))
-                throw new IllegalStateException(
-                  s"delta-feed publish-heal rename failed for batch $b")
-            }
-          }
-        }
-        // ranged feed stores: superseded (non-maximal) dirs are crash
-        // debris from compactChangelog/rewrites; the live store expires
-        // wholesale once entirely past the cutoff, and is REWRITTEN
-        // (filtered to the retained ids, then swapped) when the cutoff
-        // lands inside it — retention stays row-exact under compaction
-        val ranged = rangedFeedDirs()
-        ranged.dropRight(1).foreach { case (_, _, p) => fs.delete(p, true) }
-        ranged.lastOption.foreach { case (lo, hi, p) =>
-          if (hi <= cutoff) fs.delete(p, true)
-          else if (lo <= cutoff) {
-            val cols = LakeTable.changeFeedSchema.fieldNames.map(col).toIndexedSeq
-            val keepLo = cutoff + 1
-            val tmp = new Path(clDir, s".tmp${LakeTable.RangedFeedPrefix}$keepLo-$hi")
-            val live = new Path(clDir, s"${LakeTable.RangedFeedPrefix}$keepLo-$hi")
-            fs.delete(tmp, true)
-            fs.delete(live, true) // crashed-rewrite leftover
-            spark.read.schema(changeFeedSchemaOf(current.schema)).parquet(p.toString)
-              .filter(col("batch_id") > cutoff)
-              .select(cols: _*)
-              .repartitionByRange(col("batch_id"), col("doc_id"))
-              .sortWithinPartitions(col("batch_id"), col("doc_id"))
-              .write.mode("overwrite").parquet(tmp.toString)
-            if (!fs.rename(tmp, live))
-              throw new IllegalStateException(
-                s"vacuum: feed retention rewrite rename failed for $live")
-            fs.delete(p, true)
-          }
-        }
+      val s = current
+      val cutoff = s.batchId - changelogRetainBatches
+      val expired = s.feeds.filter(_.fromBatch <= cutoff)
+      if (expired.nonEmpty) {
+        val cut = expired.filter(_.toBatch > cutoff).map(f => writeFeedSet(s, f.kind, cutoff + 1,
+          f.toBatch, readSets(s, f.kind, Seq(f)).filter(col("batch_id") > cutoff)))
+        commit(Nil, Set.empty, s.batchId, Map.empty, Nil, s.version,
+          newFeeds = cut, keepFeed = _.fromBatch > cutoff)
       }
     }
     val versions = listVersions
     val snaps = versions.takeRight(retainLast).map(snapshotAt)
-    val referenced = snaps.flatMap(_.files).map(f => new Path(root, f.path).toUri.getPath).toSet
+    val referenced = snaps.flatMap(s => s.files.map(_.path) ++ s.feeds.flatMap(_.files))
+      .map(f => new Path(root, f).toUri.getPath).toSet
     val refManifests = snaps.flatMap(_.manifests).map(m => new Path(root, m).toUri.getPath).toSet
     versions.dropRight(retainLast).foreach { v =>
       fs.delete(new Path(snapDir, f"v$v%08d.json"), false)
@@ -1113,7 +944,6 @@ class LakeTable(val spark: SparkSession, val root: String) {
     if (fs.exists(mDir)) fs.listStatus(mDir).foreach { st =>
       if (!refManifests.contains(st.getPath.toUri.getPath)) fs.delete(st.getPath, false)
     }
-    val dataDir = new Path(root, "data")
     // post-order: returns true when `p` still holds anything after cleanup
     def walk(p: Path): Boolean = {
       var occupied = false
@@ -1126,6 +956,6 @@ class LakeTable(val spark: SparkSession, val root: String) {
       }
       occupied
     }
-    if (fs.exists(dataDir)) walk(dataDir)
+    Seq("data", ChangelogDir, DeltaFeedDir).map(new Path(root, _)).filter(fs.exists).foreach(walk)
   }
 }

@@ -9,6 +9,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -22,12 +23,14 @@ import org.apache.spark.util.SerializableConfiguration
  * `DataFile` collection. No file committer runs: no temp dirs, no
  * renames, no `_SUCCESS` marker, no driver listing and no footer
  * read-back. Visibility belongs to the caller's commit (the lake
- * snapshot for data files, the staged-dir rename for the feeds), so a
- * file no commit references is crash debris for `vacuum`.
+ * snapshot for data and feed files, the IVM manifest for state files),
+ * so a file no commit references is crash debris for the store's sweep.
  *
  * Input rows are TAGGED: `kind` (an index into `outs`), `bucket`,
  * `key` (the sort key, `doc_id`), then one struct column per output,
- * of which a row fills only its own kind's. Each task sorts its rows
+ * of which a row fills only its own kind's; an output's `constants`
+ * (a feed file's `batch_id`) are appended by the task, so a value that
+ * differs per call never enters generated code. Each task sorts its rows
  * by (kind, bucket, key) and keeps one parquet writer open at a time,
  * so it writes one file per (kind, bucket) it holds — per kind only,
  * for an output that is not bucketed — counting rows and min/max of
@@ -39,16 +42,21 @@ import org.apache.spark.util.SerializableConfiguration
  * through the path's Hadoop `FileSystem` (the raw one, for `file:`:
  * no `.crc` sidecars). A task that fails deletes
  * the files it opened; files of an attempt that died without cleaning
- * up are never reported, and callers that publish a directory delete
- * every file in it that no result names ([[TaskWriter.keepOnlyReported]]).
+ * up are never reported, and a caller that reads a whole directory
+ * deletes every file in it that no result names
+ * ([[TaskWriter.keepOnlyReported]]).
  */
 private[graft] object TaskWriter {
 
   /** One output: files land under `dir`, in `<name>=<bucket>/`
     * subdirs when `bucketDir = Some(name)`, with `schema`; `lsnField`
-    * names the long column whose min/max each file reports. */
+    * names the long column whose min/max each file reports, and
+    * `constants` are the values of the schema's last fields in every
+    * row — the input struct carries the fields before them. */
   final case class Out(dir: String, schema: StructType, lsnField: Option[String] = None,
-      bucketDir: Option[String] = None)
+      bucketDir: Option[String] = None, constants: Seq[Any] = Nil) {
+    def rowSchema: StructType = StructType(schema.fields.dropRight(constants.size))
+  }
 
   /** One written file, as its task reported it. `bucket` is -1 for an
     * output that is not bucketed. */
@@ -72,13 +80,14 @@ private[graft] object TaskWriter {
       val f = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, o.schema)
       (f, new SerializableConfiguration(job.getConfiguration))
     }
-    val layout = outs.map(o =>
-      (o.dir, o.bucketDir, o.schema.length, o.lsnField.fold(-1)(o.schema.fieldIndex)))
+    val layout = outs.map(o => (o.dir, o.bucketDir, o.rowSchema.length,
+      o.lsnField.fold(-1)(o.schema.fieldIndex), if (o.constants.isEmpty) null else InternalRow.fromSeq(o.constants)))
     val task = (part: Int, it: Iterator[InternalRow]) => {
       val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, part),
         TaskContext.get().attemptNumber())
       val out = Array.newBuilder[Written]
       val opened = scala.collection.mutable.ArrayBuffer.empty[(String, Configuration)]
+      val joined = new JoinedRow()
       var w: OutputWriter = null
       var kind, bucket = -1
       var n, lo, hi = 0L
@@ -90,7 +99,7 @@ private[graft] object TaskWriter {
       try {
         it.foreach { r =>
           val k = r.getInt(0)
-          val (dir, bucketDir, width, lsnAt) = layout(k)
+          val (dir, bucketDir, width, lsnAt, tail) = layout(k)
           val b = if (bucketDir.isDefined) r.getInt(1) else -1
           if (w == null || k != kind || b != bucket) {
             finish()
@@ -107,7 +116,7 @@ private[graft] object TaskWriter {
             val l = p.getLong(lsnAt)
             lo = math.min(lo, l); hi = math.max(hi, l)
           }
-          w.write(p)
+          w.write(if (tail == null) p else joined(p, tail))
           n += 1
         }
         finish()
@@ -133,13 +142,12 @@ private[graft] object TaskWriter {
   }
 
   /** Leave exactly the reported files (with their checksum sidecars)
-    * in `dir`, creating it when none landed: the output of a task
-    * attempt that failed or lost to a retry must not be published with
-    * the directory, and an output without rows still publishes. */
+    * in `dir`, which holds at least one: the output of a task attempt
+    * that failed or lost to a retry must not be read with the
+    * directory. */
   def keepOnlyReported(conf: Configuration, dir: String, reported: Seq[Written]): Unit = {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
-    if (!fs.exists(d)) { fs.mkdirs(d); return }
     val keep = reported.map(w => new Path(w.path).getName).toSet
     fs.listStatus(d).foreach { st =>
       val n = st.getPath.getName

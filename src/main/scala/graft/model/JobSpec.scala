@@ -388,7 +388,7 @@ object JobSpec {
           throw new IllegalArgumentException(
             "reader.table and reader.jdbc are mutually exclusive — pick one source")
         case _ =>
-          s"${str(j \ "reader" \ "table")}/${graft.lake.LakeTable.ChangelogDir}"
+          str(j \ "reader" \ "table") // Replay tails a table root's change feed
       },
       assumeOrdered = (j \ "reader" \ "assumeOrdered") == JBool(true),
       logFormat = str(j \ "reader" \ "format", "parquet") match {

@@ -142,7 +142,8 @@ object CdcEnvelope {
     * delta feed ([[graft.lake.LakeTable.readDeltaChanges]],
     * `writer.preimages`) supplies both images — each key's replaced
     * row (`sign = -1`) as `before` and the row the merge installed
-    * (`sign = +1`) as `after` — exactly what a downstream IVM-style
+    * (`sign = +1`) as `after`, each with every column of the table's
+    * current schema at its type — exactly what a downstream IVM-style
     * consumer needs to maintain state without reading this table. Both
     * feeds are batch-id-pruned and fenced at the same pinned batch.
     *
@@ -164,8 +165,7 @@ object CdcEnvelope {
     // the same keyed side, and Spark scans and broadcasts it once.
     val images = tbl.readDeltaChanges(sinceBatchId, hi).select(
       struct(col("batch_id"), col("doc_id"), col("sign")).as("k"),
-      struct(col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("lang"))
-        .cast(payloadSchema).as("img"))
+      struct(tbl.current.schema.fieldNames.toIndexedSeq.map(col): _*).as("img"))
     val changes = tbl.readChanges(sinceBatchId, hi)
     def probe(side: String, sign: Int): Column = col(s"$side.k") ===
       struct(changes("batch_id"), changes("doc_id"), lit(sign).as("sign"))

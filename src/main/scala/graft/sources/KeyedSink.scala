@@ -29,7 +29,7 @@ import org.apache.spark.util.SerializableConfiguration
  * sink would use unchanged:
  *
  *   - **Two-phase commit protocol**: each task writer stages its rows
- *     under `.staged-<txn>/`, task `commit()` returns a
+ *     under `.pending-<txn>/`, task `commit()` returns a
  *     [[WriterCommitMessage]] naming the finished files (task-level
  *     2PC half — Spark's OutputCommitCoordinator guarantees one
  *     attempt per partition wins), the driver's `commit(messages)`
@@ -123,7 +123,7 @@ private[sources] class KeyedSinkBatchWrite(path: String, buckets: Int,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = KeyedSink.fs(path, conf.value)
-    val staged = new Path(path, s".staged-$txn")
+    val staged = new Path(path, s".pending-$txn")
     val published = new Path(path, s"txn-$txn")
     val files = messages.flatMap { case KeyedFilesMessage(fl) => fl }
     // publish: ONE atomic dir rename makes every task's staged file
@@ -148,7 +148,7 @@ private[sources] class KeyedSinkBatchWrite(path: String, buckets: Int,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val fs = KeyedSink.fs(path, conf.value)
-    fs.delete(new Path(path, s".staged-$txn"), true)
+    fs.delete(new Path(path, s".pending-$txn"), true)
   }
 }
 
@@ -169,7 +169,7 @@ private[sources] class KeyedSinkWriter(path: String, buckets: Int, txn: String,
   private def writerFor(b: Int): java.io.BufferedWriter = {
     var w = streams.get(b)
     if (w == null) {
-      val f = new Path(path, s".staged-$txn/${KeyedSink.fileName(b, partitionId, taskId)}")
+      val f = new Path(path, s".pending-$txn/${KeyedSink.fileName(b, partitionId, taskId)}")
       w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(fs.create(f, true), "UTF-8"))
       streams.put(b, w)
       counts.put(b, 0L)
@@ -196,7 +196,7 @@ private[sources] class KeyedSinkWriter(path: String, buckets: Int, txn: String,
     streams.values.forEach(w => try w.close() catch { case _: Exception => () })
     counts.keySet.forEach { b =>
       fs.delete(new Path(path,
-        s".staged-$txn/${KeyedSink.fileName(b, partitionId, taskId)}"), false)
+        s".pending-$txn/${KeyedSink.fileName(b, partitionId, taskId)}"), false)
       ()
     }
   }

@@ -64,7 +64,9 @@ object Replay {
   def createTable(spark: SparkSession, tableDir: String, nBuckets: Int): LakeTable =
     LakeTable.create(spark, tableDir, initialSchema, nBuckets)
 
-  /** Replay everything currently in `logDir` into `tableDir`, resuming
+  /** Replay everything currently in `logDir` — a change-log directory,
+    * or the root of another lake table whose change feed to tail — into
+    * `tableDir`, resuming
     * from `checkpointDir` if it exists. Blocks until the log is drained
     * (Trigger.AvailableNow). `stopAfterBatches` kills the query (after
     * the sink commit, before the checkpoint advances) to exercise the
@@ -130,11 +132,13 @@ object Replay {
       l
     }
 
-    // the file source rejects files+bytes caps together: the byte cap
-    // (DataX byteCapacity analog) takes precedence when configured.
-    // logFormat selects the wire decoding: "parquet" = typed log
-    // segments read under the explicit ChangeLog schema; "debezium" =
-    // JSON-lines envelopes decoded by the CdcEnvelope codec (one fused
+    // a table root is tailed through its snapshots' change feed sets
+    // ([[FeedTail]], `maxFilesPerTrigger` upstream batches per trigger).
+    // Otherwise the file source: it rejects files+bytes caps together,
+    // and the byte cap (DataX byteCapacity analog) takes precedence when
+    // configured. logFormat selects the wire decoding: "parquet" = typed
+    // log segments read under the explicit ChangeLog schema; "debezium"
+    // = JSON-lines envelopes decoded by the CdcEnvelope codec (one fused
     // projection riding the text scan — malformed lines surface as
     // null-key/null-op rows for the dirty router, never a stream stop)
     val reader = logFormat match {
@@ -143,12 +147,13 @@ object Replay {
       case other => throw new IllegalArgumentException(
         s"reader.format must be 'parquet' or 'debezium', got '$other'")
     }
-    if (maxBytesPerTrigger > 0) reader.option("maxBytesPerTrigger", maxBytesPerTrigger)
+    val tail = LakeTable.exists(spark, logDir)
+    if (maxBytesPerTrigger > 0 && !tail) reader.option("maxBytesPerTrigger", maxBytesPerTrigger)
     else reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val stream = logFormat match {
-      case "parquet" => reader.parquet(logDir)
-      case _ => graft.sources.CdcEnvelope.parse(reader.text(logDir))
-    }
+    val stream =
+      if (tail) reader.format(classOf[FeedTail].getName).load(logDir)
+      else if (logFormat == "parquet") reader.parquet(logDir)
+      else graft.sources.CdcEnvelope.parse(reader.text(logDir))
 
     var batches = 0
     var appliedRows = 0L
@@ -173,14 +178,6 @@ object Replay {
         // quarantine write is additionally idempotent per batch
         // (batch-scoped overwrite path in DirtyRouter).
         val fenced = batchId >= 0 && batchId <= table.current.batchId
-        // feed-publication heal on fenced retries: BatchApply is not
-        // re-entered for an already-committed batch, so the staged
-        // changelog partition (written before that batch's commit) is
-        // renamed live HERE if the crash hit between commit and publish
-        if (fenced && changelog) {
-          BatchApply.publishChangelog(table, batchId)
-          if (preimages) BatchApply.publishDeltaFeed(table, batchId)
-        }
         val split =
           if (fenced || !routeDirty) None
           else Some(graft.apply.DirtyRouter.route(

@@ -9,4 +9,10 @@ object SessionBridge {
   def onSession(df: DataFrame, spark: SparkSession): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].queryExecution.logical)
+
+  /** `df` as a streaming frame over its own RDD, the shape a V1
+    * streaming source's `getBatch` must return. */
+  def asStreaming(df: DataFrame): DataFrame =
+    df.sparkSession.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd, df.schema, isStreaming = true)
 }

@@ -105,6 +105,26 @@ class CdcEngineSpec extends AnyFunSuite {
     assert(mismatches.isEmpty, mismatches.mkString("; "))
   }
 
+  test("kill mid-replay with both feeds on, resume: each feed row appears once") {
+    val dir = tmpDir("graft-resume-feeds")
+    ChangeLogGen.write(spark, cfg.copy(nEvents = 6000, nSegments = 4), s"$dir/log")
+    def run(name: String, stop: Int): LakeTable = Replay.replay(spark, s"$dir/log", s"$dir/$name",
+      s"$dir/cp-$name", nBuckets = 8, maxFilesPerTrigger = 1, changelog = true, preimages = true,
+      stopAfterBatches = stop)
+    run("killed", stop = 2) // batch 1 commits, its checkpoint does not
+    val killed = run("killed", stop = Int.MaxValue)
+    val ref = run("ref", stop = Int.MaxValue)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(c => col(c).cast("string")): _*).collect().map(_.mkString("|")).toSeq.sorted
+    val changes = rows(killed.readChanges(), "batch_id", "doc_id", "op", "lsn")
+    val images = rows(killed.readDeltaChanges(), "batch_id", "doc_id", "sign", "lsn")
+    assert(changes.nonEmpty && changes.distinct == changes)
+    assert(images.nonEmpty && images.distinct == images)
+    assert(changes == rows(ref.readChanges(), "batch_id", "doc_id", "op", "lsn"))
+    assert(images == rows(ref.readDeltaChanges(), "batch_id", "doc_id", "sign", "lsn"))
+    assert(killed.deltaFeedCovers(-1L))
+  }
+
   test("replay runs batches in the caller's session and reuses compiled classes across runs") {
     import org.apache.hadoop.fs.{FileSystem, Path}
     import org.apache.spark.metrics.source.CodegenMetrics
@@ -188,39 +208,27 @@ class CdcEngineSpec extends AnyFunSuite {
     assert(feed1.count() == expect.count())
     assert(feed1.select("doc_id", "lsn", "op").exceptAll(expect).count() == 0)
 
-    // a fenced retry of the committed batch does NOT rewrite an
-    // existing feed partition (mtime unchanged)
-    val part = new org.apache.hadoop.fs.Path(
-      s"$dir/table/${LakeTable.ChangelogDir}/batch_id=1")
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def stamp = fs.listStatus(part).map(_.getModificationTime).max
-    val before = stamp
+    // a fenced retry of the committed batch writes and commits nothing:
+    // its feed files were recorded by the commit that applied it
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def feedFiles(): Seq[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$dir/table/${LakeTable.ChangelogDir}"), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSeq.sorted
+    }
+    val (v, sets, files) = (table.currentVersion, table.current.feeds, feedFiles())
     BatchApply.apply(table, b2, batchId = 1, changelog = true)
-    assert(stamp == before)
+    assert(table.currentVersion == v && table.current.feeds == sets && feedFiles() == files)
 
-    // crash window heal: the feed is STAGED before the commit and
-    // PUBLISHED (atomic rename) after it. Simulate "commit landed,
-    // publish didn't" by un-publishing the partition back to its
-    // staged name; the fenced retry re-runs the rename — a metadata
-    // op over the exact content the committed run staged.
-    val staged = new org.apache.hadoop.fs.Path(
-      BatchApply.stagedChangelog(table, 1))
-    assert(fs.rename(part, staged))
-    assert(table.readChanges(sinceBatchId = 0).count() == 0) // staged dir invisible
-    BatchApply.apply(table, b2, batchId = 1, changelog = true)
-    assert(fs.exists(part) && !fs.exists(staged))
-    val refilled = table.readChanges(sinceBatchId = 0)
-    assert(refilled.count() == expect.count())
-    assert(refilled.select("doc_id", "lsn", "op").exceptAll(expect).count() == 0)
-
-    // an uncommitted feed partition (crash between feed write and
-    // snapshot commit) is invisible: upper fence batch_id <= snapshot's
+    // feed files no commit recorded (a crash between the feed write and
+    // the snapshot commit) are invisible: no feed set names them
+    val orphan = s"$dir/table/${LakeTable.ChangelogDir}/c-orphan"
     b2.limit(10)
       .select(col("doc_id"), col("op"), col("lsn"), col("tokens"), col("n_tok"),
-        col("source"), col("lang"), col("shard"))
-      .write.parquet(s"$dir/table/${LakeTable.ChangelogDir}/batch_id=7")
+        col("source"), col("lang"), col("shard"), lit(7).as("batch_id"))
+      .write.parquet(orphan)
     assert(table.readChanges(sinceBatchId = -1)
       .filter(col("batch_id") === 7).count() == 0)
+    assert(table.readChanges(sinceBatchId = 0).count() == expect.count())
 
     // replaying the full feed into a second table reproduces the state
     // (the feed is a complete, canonical change stream)
@@ -231,51 +239,48 @@ class CdcEngineSpec extends AnyFunSuite {
     assert(a.count() == b.count())
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
 
-    // feed retention: vacuum expires partitions past the window
-    // (cutoff = current.batchId - retain), keeps the recent ones
+    // feed retention: vacuum expires the sets past the window (cutoff =
+    // current.batchId - retain) and their files, keeps the recent ones,
+    // and deletes the orphaned files
+    val batch0Files = table.current.feeds.filter(_.toBatch == 0).flatMap(_.files)
+    assert(batch0Files.nonEmpty)
     table.vacuum(retainLast = 1, changelogRetainBatches = 1)
-    val clDir = new org.apache.hadoop.fs.Path(s"$dir/table/${LakeTable.ChangelogDir}")
-    val names = fs.listStatus(clDir).map(_.getPath.getName).toSet
-    assert(!names.contains("batch_id=0") && names.contains("batch_id=1"))
-    assert(table.readChanges(sinceBatchId = 0).count() == expect.count())
+    assert(table.current.feeds.map(_.toBatch).toSet == Set(1L))
+    assert(batch0Files.forall(f => !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/table/$f"))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(orphan)))
+    assert(table.readChanges(sinceBatchId = -1).count() == expect.count())
     log.unpersist()
   }
 
-  test("vacuum heals (never deletes) a committed-but-unpublished staged feed partition") {
+  test("vacuum keeps committed feed files, deletes orphaned ones") {
     val log = ChangeLogGen.events(spark, cfg.copy(nEvents = 3000)).cache()
-    val dir = tmpDir("graft-vacheal")
+    val dir = tmpDir("graft-vacfeed")
     val table = Replay.createTable(spark, s"$dir/table", nBuckets = 8)
-    val b1 = log.filter(col("lsn") <= 1500)
-    val b2 = log.filter(col("lsn") > 1500)
-    BatchApply.apply(table, b1, batchId = 0, changelog = true)
-    BatchApply.apply(table, b2, batchId = 1, changelog = true)
-    val expect = table.readChanges(sinceBatchId = 0).select("doc_id", "lsn", "op")
-      .collect().toSet
-    // simulate the commit-landed/publish-missing crash window on the
-    // CURRENT batch: un-publish batch 1 back to its staged name
-    val part = new org.apache.hadoop.fs.Path(
-      s"$dir/table/${LakeTable.ChangelogDir}/batch_id=1")
-    val staged = new org.apache.hadoop.fs.Path(BatchApply.stagedChangelog(table, 1))
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(part, staged))
-    // vacuum with retention BEFORE any fenced retry ran: the staged dir
-    // is the only copy of batch 1's changes — it must be PUBLISHED, not
-    // deleted (deleting would leave a permanent hole in the feed)
+    BatchApply.apply(table, log.filter(col("lsn") <= 1500), batchId = 0, changelog = true, preimages = true)
+    BatchApply.apply(table, log.filter(col("lsn") > 1500), batchId = 1, changelog = true, preimages = true)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("batch_id", "doc_id", "lsn")
+      .collect().map(r => (r.getInt(0), r.get(1).toString, r.getLong(2))).toSeq.sorted
+    val (changes, images) = (rows(table.readChanges()), rows(table.readDeltaChanges()))
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(rel: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/table/$rel"))
+    val orphans = Seq(LakeTable.ChangelogDir, LakeTable.DeltaFeedDir, "data/c-orphan/bucket=0")
+      .map(d => s"$d/orphan.parquet")
+    orphans.foreach(o => fs.create(new org.apache.hadoop.fs.Path(s"$dir/table/$o")).close())
+    val committed = table.current.feeds.flatMap(_.files)
+    assert(committed.nonEmpty && committed.forall(exists))
+    // no retention: every committed feed file stays, the orphans go
+    table.vacuum(retainLast = 1)
+    assert(committed.forall(exists) && !orphans.exists(exists))
+    assert(rows(table.readChanges()) == changes && rows(table.readDeltaChanges()) == images)
+    // a retention window past every batch expires nothing, not even a commit
+    val v = table.currentVersion
     table.vacuum(retainLast = 1, changelogRetainBatches = 10)
-    assert(fs.exists(part) && !fs.exists(staged))
-    assert(table.readChanges(sinceBatchId = 0).select("doc_id", "lsn", "op")
-      .collect().toSet == expect)
-    // a staged dir whose FINAL partition exists is debris: deleted
-    val junk = new org.apache.hadoop.fs.Path(BatchApply.stagedChangelog(table, 1))
-    fs.mkdirs(junk)
-    table.vacuum(retainLast = 1, changelogRetainBatches = 10)
-    assert(fs.exists(part) && !fs.exists(junk))
-    // a staged dir past the retention cutoff is expired with its batch
-    // (cutoff = applied(1) - 1 = 0: batch 0 expires, batch 1 stays)
-    val old = new org.apache.hadoop.fs.Path(BatchApply.stagedChangelog(table, 0))
-    fs.mkdirs(old)
-    table.vacuum(retainLast = 1, changelogRetainBatches = 1)
-    assert(!fs.exists(old) && fs.exists(part))
+    assert(table.currentVersion == v && committed.forall(exists))
+    // a window of zero expires both feeds whole; their files go with them
+    table.vacuum(retainLast = 1, changelogRetainBatches = 0)
+    assert(table.current.feeds.isEmpty && !committed.exists(exists))
+    assert(table.readChanges().count() == 0 && table.readDeltaChanges().count() == 0)
+    assert(table.read().count() > 0)
     log.unpersist()
   }
 
@@ -292,33 +297,33 @@ class CdcEngineSpec extends AnyFunSuite {
       table.readChanges(since).select(col("doc_id").cast("string"), col("op"),
         col("lsn"), col("batch_id").cast("int"))
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getInt(3))).toSet
-    val clDir = new org.apache.hadoop.fs.Path(s"$dir/table/${LakeTable.ChangelogDir}")
-    val fs = clDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dirNames() = fs.listStatus(clDir).map(_.getPath.getName).toSet
+    def sets() = table.current.feeds.filter(_.kind == LakeTable.ChangelogDir)
+      .map(f => (f.fromBatch, f.toBatch)).toSet
     val before = feed(-1)
     val beforeSince = feed(1)
     table.compactChangelog(retainRecent = 1)
-    // batches 0..2 compacted into ONE ranged store; batch 3 (live tail)
-    // stays a per-batch partition; a tailer sees identical rows, and
-    // since-filters still prune correctly through the ranged store
-    assert(dirNames().count(_.startsWith("batch_id=")) == 1)
-    assert(dirNames().count(_.startsWith(LakeTable.RangedFeedPrefix)) == 1)
+    // batches 0..2 compacted into ONE set; batch 3 (live tail) stays a
+    // per-batch set; a tailer sees identical rows, and since-filters
+    // still prune correctly through the compacted set
+    assert(sets() == Set((0L, 2L), (3L, 3L)))
     assert(feed(-1) == before)
     assert(feed(1) == beforeSince)
-    // a second run with nothing new eligible is a no-op
-    val snap1 = dirNames()
+    assert(feed(0) == before.filter(_._4 > 0))
+    // a second run with nothing new eligible is a no-op (no commit)
+    val v = table.currentVersion
     table.compactChangelog(retainRecent = 1)
-    assert(dirNames() == snap1)
-    // more batches, compact again: the prior ranged store is subsumed —
-    // still exactly one ranged store, rows still identical
+    assert(table.currentVersion == v)
+    // more batches, compact again: the prior compacted set is subsumed —
+    // still exactly one compacted set, rows still identical
     BatchApply.apply(table, log.filter(col("lsn") > 4000), batchId = 4, changelog = true)
     val before5 = feed(-1)
     table.compactChangelog(retainRecent = 1)
-    assert(dirNames().count(_.startsWith(LakeTable.RangedFeedPrefix)) == 1)
+    assert(sets() == Set((0L, 3L), (4L, 4L)))
     assert(feed(-1) == before5)
-    // retention cutoff INSIDE the ranged store: vacuum rewrites it
+    // retention cutoff INSIDE the compacted set: vacuum rewrites it
     // row-exactly (batches <= applied-2 = 2 expire, 3..4 remain)
     table.vacuum(retainLast = 1, changelogRetainBatches = 2)
+    assert(sets() == Set((3L, 3L), (4L, 4L)))
     assert(feed(-1) == before5.filter(_._4 > 2))
     // stream-tailing a compacted feed still works end-to-end
     val down = Replay.createTable(spark, s"$dir/down", nBuckets = 8)
@@ -332,11 +337,18 @@ class CdcEngineSpec extends AnyFunSuite {
     val table = Replay.createTable(spark, s"$dir/table", nBuckets = 4)
     val clDir = new org.apache.hadoop.fs.Path(s"$dir/table/${LakeTable.ChangelogDir}")
     val fs = clDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash-after-staging-before-first-commit: only a dot-dir exists
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$clDir/.staged-batch_id=0"))
-    val feed = table.readChanges()
-    assert(feed.schema == LakeTable.changeFeedSchema)
-    assert(feed.count() == 0)
+    // a crash after the first feed write, before its commit: feed files
+    // that no snapshot names
+    fs.create(new org.apache.hadoop.fs.Path(s"$clDir/c-orphan/orphan.parquet")).close()
+    val empty = table.readChanges()
+    assert(empty.count() == 0)
+    assert(empty.schema == LakeTable.changeFeedSchema(table.current.schema))
+    // the first committed batch reads at the same schema (no lang in the
+    // events, so the table does not evolve)
+    val log = ChangeLogGen.events(spark, cfg.copy(nEvents = 500, nDocs = 100, evolveAtLsn = Long.MaxValue))
+    BatchApply.apply(table, log, batchId = 0, changelog = true)
+    val first = table.readChanges()
+    assert(first.count() > 0 && first.schema == empty.schema)
   }
 
   test("feed-replay equivalence: any batch partitioning reconstructs the table from its feed") {
@@ -367,18 +379,21 @@ class CdcEngineSpec extends AnyFunSuite {
   }
 
   test("pipeline chaining: a downstream table STREAM-tails the upstream's change feed") {
-    // CDC out -> CDC in with ZERO new machinery: the feed rows carry the
-    // ChangeLog schema, so the ordinary Replay file source points at
-    // `<tableA>/changelog` exactly as it points at a binlog directory —
-    // the otsstreamreader composability story (a job tailing another
-    // job's output table)
+    // CDC out -> CDC in: given a table root instead of a binlog
+    // directory, Replay tails its committed change feed sets through the
+    // snapshot-driven source, `maxFilesPerTrigger` upstream batches per
+    // trigger — the otsstreamreader composability story (a job tailing
+    // another job's output table)
     val dir = tmpDir("graft-chain")
     val small = cfg.copy(nEvents = 6000, nSegments = 4)
     ChangeLogGen.write(spark, small, s"$dir/log")
     val a = Replay.replay(spark, s"$dir/log", s"$dir/ta", s"$dir/cpa",
       nBuckets = 8, maxFilesPerTrigger = 1, changelog = true)
-    val b = Replay.replay(spark, s"$dir/ta/${LakeTable.ChangelogDir}", s"$dir/tb", s"$dir/cpb",
+    val b = Replay.replay(spark, s"$dir/ta", s"$dir/tb", s"$dir/cpb",
       nBuckets = 8, maxFilesPerTrigger = 2)
+    val upstream = a.current.batchId + 1
+    assert(upstream > 2 && b.current.batchId == (upstream + 1) / 2 - 1,
+      s"$upstream upstream batches, 2 per trigger: ${b.current.batchId + 1} downstream")
     val x = a.read()
     val y = b.read()
     assert(x.count() > 0 && x.count() == y.count())

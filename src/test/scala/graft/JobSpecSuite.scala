@@ -160,7 +160,7 @@ class JobSpecSuite extends AnyFunSuite {
       s"""{"reader": {"table": "$dir/ta"},
          | "writer": {"tableDir": "$dir/tb", "checkpointDir": "$dir/cpb",
          |            "nBuckets": 4}}""".stripMargin)
-    assert(spec.logDir == s"$dir/ta/changelog")
+    assert(spec.logDir == s"$dir/ta") // Replay tails the table root's feed
     val b = Replay.replay(spark, spec.logDir, spec.tableDir, spec.checkpointDir,
       nBuckets = spec.nBuckets)
     val (x, y) = (a.read(), b.read())
@@ -181,7 +181,7 @@ class JobSpecSuite extends AnyFunSuite {
     intercept[IllegalArgumentException] { JobSpec.parse(
       s"""{"reader": {"logDir": "/l", $jdbc}, $w}""") }
     // each source alone still parses
-    assert(JobSpec.parse(s"""{"reader": {"table": "/ta"}, $w}""").logDir == "/ta/changelog")
+    assert(JobSpec.parse(s"""{"reader": {"table": "/ta"}, $w}""").logDir == "/ta")
     assert(JobSpec.parse(s"""{"reader": {"logDir": "/l"}, $w}""").logDir == "/l")
     assert(JobSpec.parse(s"""{"reader": {$jdbc}, $w}""").jdbcReader.isDefined)
   }

@@ -80,7 +80,7 @@ class KeyedSinkSpec extends AnyFunSuite {
     // invisible (readers see only manifest-listed files)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val stray = new org.apache.hadoop.fs.Path(s"$path/.staged-bogus/b0000-p00000-t0.tsv")
+    val stray = new org.apache.hadoop.fs.Path(s"$path/.pending-bogus/b0000-p00000-t0.tsv")
     val out = fs.create(stray, true)
     out.write("zz\t999\tI\t1\tghost\n".getBytes("UTF-8")); out.close()
     assert(served(path) == before, "uncommitted staged files must never serve")

@@ -210,6 +210,7 @@ class LakeManifestSpec extends AnyFunSuite {
     BatchApply.apply(table, ChangeLogGen.events(spark, cfg, 1000, 2000), 1, changelog = true)
     val goodV = table.currentVersion
     val goodState = table.read().orderBy("doc_id").collect()
+    val goodFeed = feedRows(table)
     BatchApply.apply(table, ChangeLogGen.events(spark, cfg, 2000, 3000), 2, changelog = true)
     assert(!table.read().orderBy("doc_id").collect().sameElements(goodState))
 
@@ -220,31 +221,38 @@ class LakeManifestSpec extends AnyFunSuite {
     assert(rb.batchId == 1L)
     // the bad commit remains time-travelable until vacuumed
     assert(table.read(Some(table.snapshotAt(goodV + 1))).count() > 0)
-    // feed: batch 2's partition is gone; the feed now replays to the
-    // reinstated state exactly
+    // feed: batch 2's changes are gone with its feed set; the feed now
+    // replays to the reinstated state exactly
+    assert(feedRows(table) == goodFeed)
     assert(table.readChanges().agg(max(col("batch_id"))).head().getInt(0) == 1)
-    assert(!new java.io.File(s"$root/changelog/batch_id=2").exists())
+    assert(table.current.feeds.map(_.toBatch).toSet == Set(0L, 1L))
 
-    // resume ingest with a DIFFERENT batch 2: simulate an interrupted
-    // rollback cleanup by planting a stale final partition first — the
-    // fresh-commit publish must REPLACE it, never keep it
-    val stale = new java.io.File(s"$root/changelog/batch_id=2")
-    val staleSrc = s"$root/changelog/batch_id=1"
-    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(staleSrc), stale)
+    // resume ingest with a DIFFERENT batch 2: it writes its feed afresh
     val alt = ChangeLogGen.events(spark, cfg.copy(seed = 99L), 2000, 2600)
     BatchApply.apply(table, alt, 2, changelog = true)
     val feed2 = table.readChanges(sinceBatchId = 1)
     assert(feed2.select("doc_id").distinct().count() ==
       alt.select("doc_id").distinct().count(),
-      "stale rolled-back feed partition must be replaced by the re-applied batch")
+      "the rolled-back batch's feed must not survive the re-applied batch")
 
-    // guards: unknown version; rollback into compacted-feed territory
+    // guards: unknown version
     intercept[IllegalArgumentException](table.rollbackTo(9999L))
-    table.compactChangelog(retainRecent = 0) // ranges everything applied
-    intercept[IllegalArgumentException](table.rollbackTo(goodV))
+    // rollback across a feed compaction: the target's manifests carry
+    // its own feed sets, so its feed reads exactly as before
+    table.compactChangelog(retainRecent = 0) // compacts everything applied
+    assert(table.current.feeds.map(f => (f.fromBatch, f.toBatch)) == Seq((0L, 2L)))
+    table.rollbackTo(goodV)
+    assert(feedRows(table) == goodFeed)
+    assert(table.read().orderBy("doc_id").collect().sameElements(goodState))
   }
 
-  test("delta feed lifecycle: rollback prunes future partitions, vacuum expires + heals") {
+  private def feedRows(t: LakeTable): Seq[String] =
+    t.readChanges().collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
+  test("delta feed lifecycle: rollback restores sets, vacuum expires") {
     import org.apache.spark.sql.functions._
     val dir = tmpDir("graft-deltafeed-life")
     val root = s"$dir/t"
@@ -253,12 +261,9 @@ class LakeManifestSpec extends AnyFunSuite {
     (0 until 3).foreach(b => BatchApply.apply(table,
       ChangeLogGen.events(spark, cfg, b * 1000, (b + 1) * 1000), b,
       changelog = true, preimages = true))
-    def deltaParts(): Set[String] = {
-      val d = new java.io.File(s"$root/changelog_delta")
-      if (!d.exists()) Set.empty
-      else d.listFiles().map(_.getName).filter(_.startsWith("batch_id=")).toSet
-    }
-    assert(deltaParts() == Set("batch_id=0", "batch_id=1", "batch_id=2"))
+    def deltaSets(): Set[Long] =
+      table.current.feeds.filter(_.kind == LakeTable.DeltaFeedDir).map(_.toBatch).toSet
+    assert(deltaSets() == Set(0L, 1L, 2L))
     // telescoping sanity: summing the whole delta feed reproduces the
     // table's live row count per source
     val viaFeed = table.readDeltaChanges()
@@ -269,27 +274,25 @@ class LakeManifestSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(viaFeed == direct, s"feed sum $viaFeed != table state $direct")
 
-    // rollback to batch 1's version: batch 2's delta partition (and any
-    // staged debris) must go, coverage for the retained range must hold
-    val v1 = table.current.version
+    // rollback to batch 2's version: batch 3's delta set goes with it,
+    // coverage for the retained range holds
+    val v2 = table.current.version
+    val images = table.readDeltaChanges().count()
     BatchApply.apply(table, ChangeLogGen.events(spark, cfg, 3000, 3500), 3,
       changelog = true, preimages = true)
-    table.rollbackTo(v1)
-    assert(deltaParts() == Set("batch_id=0", "batch_id=1", "batch_id=2"))
+    assert(deltaSets() == Set(0L, 1L, 2L, 3L))
+    table.rollbackTo(v2)
+    assert(deltaSets() == Set(0L, 1L, 2L))
+    assert(table.readDeltaChanges().count() == images)
     assert(table.deltaFeedCovers(-1L))
 
-    // vacuum with retention 1: everything at-or-below the cutoff
-    // expires from BOTH feeds; a staged delta dir inside retention with
-    // a missing final partition heals by rename
-    val staged = new java.io.File(s"$root/changelog_delta/.staged-batch_id=2")
-    val fin = new java.io.File(s"$root/changelog_delta/batch_id=2")
-    org.apache.commons.io.FileUtils.moveDirectory(fin, staged) // fake the crash window
+    // vacuum with retention 1: applied batch is 2 after the rollback,
+    // so cutoff = 1: batches 0 and 1 expire from BOTH feeds
     table.vacuum(retainLast = 1, changelogRetainBatches = 1)
-    // applied batch is 2 after the rollback, so cutoff = 1: batches 0
-    // and 1 expire; the staged (crash-window) batch 2 HEALS by rename
-    assert(deltaParts() == Set("batch_id=2"),
-      s"expected expiry of batches <= 1 + heal of staged batch 2, got ${deltaParts()}")
-    assert(!staged.exists(), "healed staged dir must be renamed, not kept")
+    assert(deltaSets() == Set(2L))
+    assert(table.current.feeds.map(_.toBatch).toSet == Set(2L))
+    assert(table.readDeltaChanges().select("batch_id").distinct().collect().map(_.getInt(0)).toSeq == Seq(2))
+    assert(table.deltaFeedCovers(-1L))
   }
 
   test("feed reads honour an explicit upper batch fence") {

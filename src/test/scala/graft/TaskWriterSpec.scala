@@ -57,6 +57,12 @@ class TaskWriterSpec extends AnyFunSuite {
     }.toDF()
   }
 
+  /** Every file below `dir` (none when it is absent), listed level by
+    * level: `listFiles` cannot build a located status on `flaky:`. */
+  private def filesUnder(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Path] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.flatMap(st => if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st.getPath))
+
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map {
       case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
@@ -126,22 +132,20 @@ class TaskWriterSpec extends AnyFunSuite {
       rows(t.readChanges(-1L)), rows(t.readDeltaChanges(-1L)))
     val before = state(table)
     val fs = new Path(table.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parquetUnder(dir: String): Int =
-      if (!fs.exists(new Path(dir))) 0
-      else fs.listStatus(new Path(dir)).count(_.getPath.getName.endsWith(".parquet"))
+    def feedFiles(): Seq[String] = Seq(LakeTable.ChangelogDir, LakeTable.DeltaFeedDir)
+      .flatMap(d => filesUnder(fs, new Path(table.root, d))).map(_.getName)
     // the last partition's task fails at its first file, after the
     // other tasks have had time to write and report theirs
     FlakyFs.failPartition = 7
     try intercept[Exception](applyTo(table, 2))
     finally FlakyFs.failPartition = -1
     assert(FlakyFs.failed.get() > 0)
-    assert(parquetUnder(BatchApply.stagedChangelog(table, 2)) > 0, "no task wrote before the failure")
+    assert(feedFiles().nonEmpty, "no task wrote before the failure")
     assert(state(table) == before)
-    assert(!fs.exists(new Path(table.root, s"${LakeTable.ChangelogDir}/batch_id=2")))
-    assert(!fs.exists(new Path(table.root, s"${LakeTable.DeltaFeedDir}/batch_id=2")))
 
-    // the retry: every staged feed file also gets an unreported
-    // sibling, as from an attempt that died without cleaning up
+    // the retry: every feed file also gets an unreported sibling, as
+    // from an attempt that died without cleaning up; no feed set names
+    // one, so no read sees it
     FlakyFs.ghosts = true
     try applyTo(table, 2) finally FlakyFs.ghosts = false
     assert(FlakyFs.ghosted.get() > 0)
@@ -150,10 +154,55 @@ class TaskWriterSpec extends AnyFunSuite {
     assert(got == want)
     assert(changes == refChanges && images == refImages)
     assert(table.readChanges(1L).count() == ref.readChanges(1L).select("doc_id").distinct().count())
-    Seq(LakeTable.ChangelogDir, LakeTable.DeltaFeedDir).foreach { d =>
-      assert(fs.listStatus(new Path(table.root, s"$d/batch_id=2"))
-        .forall(!_.getPath.getName.contains("ghost")))
-    }
+    assert(!table.current.feeds.flatMap(_.files).exists(_.contains("ghost")))
+    assert(feedFiles().exists(_.contains("ghost")))
+  }
+
+  test("a crash between the feed write and the commit leaves only orphans; the retry applies each row once") {
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.sparkContext.hadoopConfiguration.set("fs.flaky.impl", classOf[FlakyFs].getName)
+    val base = tmpDir("graft-tw-crash")
+    val table = LakeTable.create(spark, s"flaky://$base/t", Replay.initialSchema, 8)
+    val ref = LakeTable.create(spark, s"$base/ref", Replay.initialSchema, 8)
+    val batches = Seq(
+      events(0L, 0 until 1000, "I"),
+      events(10000L, (0 until 1000 by 3) ++ (1000 until 1050), "U").unionByName(
+        events(20000L, Seq(1, 2, 7), "D")))
+    def applyTo(t: LakeTable, b: Int): Unit =
+      BatchApply.apply(t, batches(b), batchId = b, changelog = true, preimages = true)
+    (0 until 2).foreach(applyTo(ref, _))
+    applyTo(table, 0)
+    def state(t: LakeTable) = (t.currentVersion, rows(t.read()), rows(t.readChanges(-1L)),
+      rows(t.readDeltaChanges(-1L)), t.deltaFeedCovers(-1L), t.deltaFeedCovers(0L))
+    val fs = new Path(table.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootPath = new Path(table.root).toUri.getPath
+    /** root-relative paths of every parquet file under the file dirs */
+    def onDisk(): Set[String] = Seq("data", LakeTable.ChangelogDir, LakeTable.DeltaFeedDir)
+      .flatMap(d => filesUnder(fs, new Path(table.root, d))).map(_.toUri.getPath)
+      .filter(_.endsWith(".parquet")).map(_.stripPrefix(s"$rootPath/")).toSet
+    val before = state(table)
+    val files0 = onDisk()
+
+    // the write job runs and reports its files; the descriptor publish
+    // then fails: the batch's files are on disk, in no snapshot
+    FlakyFs.failSnapshots = true
+    try intercept[Exception](applyTo(table, 1)) finally FlakyFs.failSnapshots = false
+    assert(state(table) == before)
+    val orphans = onDisk() -- files0
+    assert(orphans.exists(_.startsWith(LakeTable.ChangelogDir + "/")) &&
+      orphans.exists(_.startsWith(LakeTable.DeltaFeedDir + "/")), s"no feed file was written: $orphans")
+
+    // the retry yields every row, change and image exactly once
+    applyTo(table, 1)
+    val (_, got, changes, images, covers, coversLast) = state(table)
+    val (_, want, refChanges, refImages, _, _) = state(ref)
+    assert(got == want && changes == refChanges && images == refImages && covers && coversLast)
+    // vacuum removes the orphans: what is left is what the snapshot names
+    table.vacuum(retainLast = 1)
+    val live = table.current
+    assert(onDisk() == (live.files.map(_.path) ++ live.feeds.flatMap(_.files)).toSet)
+    assert(orphans.intersect(onDisk()).isEmpty)
+    assert(rows(table.readChanges(-1L)) == refChanges && rows(table.readDeltaChanges(-1L)) == refImages)
   }
 
   test("one applied batch with both feeds runs at most 6 jobs; Ivm.sync infers no schema") {
@@ -196,21 +245,25 @@ class TaskWriterSpec extends AnyFunSuite {
 }
 
 /** A local filesystem under its own scheme that fails or shadows
-  * parquet file creates on demand (static switches: in local mode the
-  * tasks share the test's JVM). */
+  * parquet file creates, or fails snapshot-descriptor publishes, on
+  * demand (static switches: in local mode the tasks share the test's
+  * JVM). */
 class FlakyFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("flaky:///")
   override def getScheme: String = "flaky"
 
   private def before(f: Path): Unit = {
     val n = f.getName
+    if (FlakyFs.failSnapshots && f.getParent.getName == "snapshots")
+      throw new java.io.IOException(s"injected snapshot publish failure: $f")
     if (n.endsWith(".parquet") && !n.contains("ghost")) {
       if (n.startsWith(f"part-${FlakyFs.failPartition}%05d-")) {
         Thread.sleep(2000)
         FlakyFs.failed.incrementAndGet()
         throw new java.io.IOException(s"injected write failure: $f")
       }
-      if (FlakyFs.ghosts && f.getParent.getName.startsWith(".staged-")) {
+      if (FlakyFs.ghosts &&
+        Set(LakeTable.ChangelogDir, LakeTable.DeltaFeedDir)(f.getParent.getParent.getName)) {
         val g = super.create(new Path(f.getParent, s"ghost-${FlakyFs.ghosted.incrementAndGet()}.parquet"),
           true, 4096, 1.toShort, 1L << 20, null)
         try g.write("not parquet".getBytes("UTF-8")) finally g.close()
@@ -234,6 +287,7 @@ class FlakyFs extends RawLocalFileSystem {
 object FlakyFs {
   @volatile var failPartition: Int = -1
   @volatile var ghosts: Boolean = false
+  @volatile var failSnapshots: Boolean = false
   val failed = new AtomicInteger()
   val ghosted = new AtomicInteger()
 }
