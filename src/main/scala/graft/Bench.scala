@@ -42,7 +42,7 @@ import org.apache.spark.sql.SparkSession
  *
  *     A second, smaller probe measures hot-key skew handling (axis B)
  *     on one 80%-single-key log, salted vs unsalted, for BOTH aggregate
- *     classes: the algebraic canonicalize (max_by — salting measured
+ *     classes: the algebraic canonicalize (a keyed fold — salting measured
  *     unnecessary, map-side partials absorb the skew) and the
  *     non-algebraic change-history collect ([[graft.operators
  *     .ChangeHistory]] — the regime where range-salting wins).
@@ -325,7 +325,7 @@ object Bench {
       // skew probes: one Zipf-hot log (80% of events on ONE key), two
       // aggregates measured salted vs unsalted, isolated from the write
       // path so the numbers are the aggregates' own:
-      //  - canonicalize (max_by): ALGEBRAIC — map-side partials collapse
+      //  - canonicalize (keyed fold): ALGEBRAIC — map-side combine collapses
       //    the hot key to one row per map task, so salting buys nothing
       //    at any skew level (this rung documents the measured non-need
       //    and why BatchApply defaults saltBuckets=1);

@@ -2,7 +2,10 @@ package graft.apply
 
 import graft.lake.LakeTable
 import graft.model.ChangeLog
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.Partitioner
+import org.apache.spark.sql.{Column, DataFrame, SessionBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,10 +32,9 @@ import org.apache.spark.sql.types._
  *     lsn is higher, and deletes are lsn-carrying tombstones — so even a
  *     duplicated or out-of-order *event* cannot corrupt the final state.
  *
- * Scale/skew notes: `canonicalize` is a `groupBy(doc_id).agg(max_by)` —
- * a declarative aggregate with map-side partial aggregation, so a
- * hot doc_id (Zipf skew, axis B) collapses to one row per input
- * partition before the shuffle; `saltBuckets > 1` adds an explicit
+ * Scale/skew notes: `canonicalize` is a keyed fold with a map-side
+ * combine, so a hot doc_id (Zipf skew, axis B) collapses to one row per
+ * input partition before the shuffle; `saltBuckets > 1` adds an explicit
  * two-phase pre-aggregation for extreme single-key skew. The MERGE join
  * sees at most one row per key per side, hence no join skew. COW cost is
  * bounded by bucket granularity: only buckets containing changed keys are
@@ -51,37 +53,97 @@ object BatchApply {
     * contract, same as the watermark fencing), so per-shard stats
     * aggregate exactly from per-key stats.
     *
+    * The reduction is a keyed fold of the changes ([[Latest]]) with a
+    * map-side combine, so a hot doc_id collapses to one state per input
+    * partition before the shuffle, and the shuffle is Spark's hash
+    * partitioning on `doc_id` (shuffle-partition count), which the frame
+    * declares: the merge join needs no second exchange of this side.
+    * It runs no aggregation plan, so no class is generated for it.
+    * `saltBuckets > 1` keeps the explicit two-phase salted aggregation.
+    *
     * A payload column the input lacks reads as null: the change feed of
     * a table that never evolved carries no `lang`. */
   def canonicalize(events: DataFrame, saltBuckets: Int = 1): DataFrame = {
     def in(n: String): Column =
       if (events.columns.contains(n)) col(n) else lit(null).cast(ChangeLog.schema(n).dataType).as(n)
+    val changes = events.select(col("doc_id"), col("lsn").cast(LongType).as("lsn"), col("op"),
+      in("tokens"), in("n_tok"), in("source"), in("lang"), col("shard"))
+    if (saltBuckets <= 1) return latestPerKey(changes)
     val payload = struct(
-      col("lsn"), col("op"), in("tokens"), in("n_tok"), in("source"), in("lang"), col("shard"))
-    val pre =
-      if (saltBuckets <= 1) events
-        .groupBy(col("doc_id"))
-        .agg(max_by(payload, col("lsn")).as("w"), count(lit(1)).as("n_events"),
-          min(col("lsn")).as("min_lsn"), max(in("lang").isNotNull.cast("int")).as("has_lang"),
-          max((col("op") === "I").cast("int")).as("has_insert"))
-      else events
-        // two-phase for hot keys: salt pre-aggregation, then merge the
-        // per-salt winners AND their partial stats
-        .groupBy(col("doc_id"), pmod(col("lsn"), lit(saltBuckets.toLong)).as("_salt"))
-        .agg(max_by(payload, col("lsn")).as("w"), count(lit(1)).as("n_events"),
-          min(col("lsn")).as("min_lsn"), max(in("lang").isNotNull.cast("int")).as("has_lang"),
-          max((col("op") === "I").cast("int")).as("has_insert"))
-        .groupBy(col("doc_id"))
-        .agg(max_by(col("w"), col("w.lsn")).as("w"), sum(col("n_events")).as("n_events"),
-          min(col("min_lsn")).as("min_lsn"), max(col("has_lang")).as("has_lang"),
-          max(col("has_insert")).as("has_insert"))
-    pre.select(col("doc_id"), col("w.lsn").as("lsn"), col("w.op").as("op"),
-      col("w.tokens").as("tokens"), col("w.n_tok").as("n_tok"),
-      col("w.source").as("source"), col("w.lang").as("lang"), col("w.shard").as("shard"),
-      col("n_events").cast("long").as("n_events"), col("min_lsn"), col("has_lang"),
-      // did this batch carry an INSERT for the key? (first-seen marker —
-      // dedup admission gates on it so updates never re-pay the probe)
-      col("has_insert"))
+      col("lsn"), col("op"), col("tokens"), col("n_tok"), col("source"), col("lang"), col("shard"))
+    changes
+      // two-phase for hot keys: salt pre-aggregation, then merge the
+      // per-salt winners AND their partial stats
+      .groupBy(col("doc_id"), pmod(col("lsn"), lit(saltBuckets.toLong)).as("_salt"))
+      .agg(max_by(payload, col("lsn")).as("w"), count(lit(1)).as("n_events"),
+        min(col("lsn")).as("min_lsn"), max(col("lang").isNotNull.cast("int")).as("has_lang"),
+        max((col("op") === "I").cast("int")).as("has_insert"))
+      .groupBy(col("doc_id"))
+      .agg(max_by(col("w"), col("w.lsn")).as("w"), sum(col("n_events")).as("n_events"),
+        min(col("min_lsn")).as("min_lsn"), max(col("has_lang")).as("has_lang"),
+        max(col("has_insert")).as("has_insert"))
+      .select(col("doc_id"), col("w.lsn").as("lsn"), col("w.op").as("op"),
+        col("w.tokens").as("tokens"), col("w.n_tok").as("n_tok"),
+        col("w.source").as("source"), col("w.lang").as("lang"), col("w.shard").as("shard"),
+        col("n_events").cast("long").as("n_events"), col("min_lsn"), col("has_lang"),
+        col("has_insert"))
+  }
+
+  /** [[canonicalize]]'s fold over `changes` (doc_id, lsn, op, tokens,
+    * n_tok, source, lang, shard). `has_insert` — did this batch carry
+    * an INSERT for the key? — is the first-seen marker dedup admission
+    * gates on, so updates never re-pay the probe. SQL null semantics
+    * as an aggregate's: a change with a null lsn never wins and has no
+    * lsn to count, and a key whose ops are all null has no
+    * `has_insert`. */
+  private def latestPerKey(changes: DataFrame): DataFrame = {
+    val schema = changes.schema
+    val keyType = schema("doc_id").dataType
+    val n = changes.sparkSession.sessionState.conf.numShufflePartitions
+    val bucketOf = LakeTable.bucketOfValue(keyType, n)
+    val byKeyHash = new Partitioner {
+      def numPartitions: Int = n
+      def getPartition(key: Any): Int = bucketOf(key)
+    }
+    val types = schema.fields.map(_.dataType)
+    val rows = changes.queryExecution.toRdd
+      .map(r => (InternalRow.copyValue(r.get(0, keyType)), Latest(r)))
+      .reduceByKey(byKeyHash, _ + _)
+      .map { case (key, l) =>
+        val w = l.win
+        def f(i: Int): Any = if (w == null || w.isNullAt(i)) null else w.get(i, types(i))
+        new GenericInternalRow(Array[Any](
+          key, f(1), f(2), f(3), f(4), f(5), f(6), f(7), l.n, l.minLsn,
+          if (l.lang) 1 else 0, if (l.insert < 0) null else l.insert)): InternalRow
+      }
+    val out = StructType(schema.fields.map(_.copy(nullable = true)) ++ Seq(
+      StructField("n_events", LongType), StructField("min_lsn", LongType),
+      StructField("has_lang", IntegerType), StructField("has_insert", IntegerType)))
+    SessionBridge.hashPartitionedFrame(changes.sparkSession, rows, out, "doc_id", n)
+  }
+
+  /** One key's fold state: the winning change row (max lsn, null when
+    * no change had one), the change count, the min lsn, whether any
+    * change carried `lang`, and whether one was an insert (-1: no op
+    * known). */
+  private final case class Latest(win: InternalRow, n: Long,
+      minLsn: java.lang.Long, lang: Boolean, insert: Int) {
+    def +(o: Latest): Latest = Latest(
+      if (o.win != null && (win == null || o.win.getLong(1) > win.getLong(1))) o.win else win,
+      n + o.n,
+      if (minLsn == null) o.minLsn else if (o.minLsn == null) minLsn else math.min(minLsn, o.minLsn),
+      lang || o.lang, math.max(insert, o.insert))
+  }
+
+  private object Latest {
+    private val Insert = org.apache.spark.unsafe.types.UTF8String.fromString("I")
+
+    def apply(r: InternalRow): Latest = {
+      val hasLsn = !r.isNullAt(1)
+      Latest(if (hasLsn) r.copy() else null, 1L,
+        if (hasLsn) java.lang.Long.valueOf(r.getLong(1)) else null, !r.isNullAt(6),
+        if (r.isNullAt(2)) -1 else if (r.getUTF8String(2) == Insert) 1 else 0)
+    }
   }
 
   /** The evolved user schema this engine knows how to advance to (additive:
@@ -166,39 +228,42 @@ object BatchApply {
     //      nothing of it is left to do.
     if (batchId >= 0 && batchId <= snap.batchId) return snap
 
-    val canonical = canonicalIn
+    val withBucket = canonicalIn
       .withColumn("bucket", LakeTable.bucketExpr(col("doc_id"), snap.nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // ---- per-shard stats (lineage offset ranges, watermark advance,
+    //      evolution detection) AND per-bucket change counts, folded
+    //      over the CANONICAL rows in the job that keeps them for the
+    //      merge — the canonicalize shuffle already aggregated per-key
+    //      raw-event stats, so the raw batch is scanned exactly once per
+    //      batch, and the stats cost no job and no generated class of
+    //      their own (one fixed job-launch cost less per micro-batch)
+    val at = withBucket.schema.fieldNames.zipWithIndex.toMap
+    val (iShard, iMin, iLsn, iN, iLang, iBucket) =
+      (at("shard"), at("min_lsn"), at("lsn"), at("n_events"), at("has_lang"), at("bucket"))
+    val (canonical, folds, release) = SessionBridge.persistFold(withBucket) { it =>
+      val shards = scala.collection.mutable.HashMap.empty[Int, ShardStat]
+      val docs = scala.collection.mutable.HashMap.empty[Int, Long]
+      it.foreach { r =>
+        if (!r.isNullAt(iShard)) {
+          val st = ShardStat(r.getLong(iMin), r.getLong(iLsn), r.getLong(iN), r.getInt(iLang) > 0)
+          shards.updateWith(r.getInt(iShard))(o => Some(o.fold(st)(_ + st)))
+        }
+        docs.updateWith(r.getInt(iBucket))(o => Some(o.getOrElse(0L) + 1L))
+      }
+      (shards.toMap, docs.toMap)
+    }
     try {
-      // ---- per-shard stats (lineage offset ranges, watermark advance,
-      //      evolution detection) AND per-bucket change counts in ONE
-      //      grouping-sets job over the CANONICAL rows — the
-      //      canonicalize shuffle already aggregated per-key raw-event
-      //      stats, so the raw batch is scanned exactly once per batch,
-      //      and fusing the two tiny collects halves the serial
-      //      job-launch cost the driver pays every micro-batch (the
-      //      fixed per-batch overhead is what erodes N->4N scaling
-      //      efficiency: it is constant across parallelism levels)
-      val shardAndBucket = canonical.groupingSets(
-          Seq(Seq(col("shard")), Seq(col("bucket"))), col("shard"), col("bucket"))
-        .agg(min(col("min_lsn")).as("minLsn"), max(col("lsn")).as("maxLsn"),
-          sum(col("n_events")).as("rows"), max(col("has_lang")).as("hasLang"),
-          count(lit(1)).as("docs"))
-        .collect()
-      val stats = shardAndBucket.filter(r => !r.isNullAt(r.fieldIndex("shard")))
+      val stats = folds.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
       if (stats.isEmpty) return snap
-      val needsEvolve = stats.exists(_.getAs[Int]("hasLang") > 0) &&
+      val needsEvolve = stats.values.exists(_.hasLang) &&
         !snap.schema.fieldNames.contains("lang")
       if (needsEvolve) snap = table.evolveSchema(evolvedSchema(snap.schema))
-      val lineage = stats.map(r => LakeTable.LineageEntry(
-        batchId, r.getAs[Int]("shard"), r.getAs[Long]("minLsn"), r.getAs[Long]("maxLsn"), r.getAs[Long]("rows"))).toSeq
-      val watermarks = stats.map(r => r.getAs[Int]("shard") -> r.getAs[Long]("maxLsn")).toMap
+      val lineage = stats.toSeq.sortBy(_._1).map { case (shard, st) =>
+        LakeTable.LineageEntry(batchId, shard, st.minLsn, st.maxLsn, st.rows) }
+      val watermarks = stats.map { case (shard, st) => shard -> st.maxLsn }
 
-      // ---- manifest-level pruning + per-bucket change counts (the
-      //      grouping-set rows keyed by bucket)
-      val changedPerBucket = shardAndBucket
-        .filter(r => !r.isNullAt(r.fieldIndex("bucket")))
-        .map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("docs")).toMap
+      // ---- manifest-level pruning + per-bucket change counts
+      val changedPerBucket = folds.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _)
       val touched = changedPerBucket.keySet
       if (touched.isEmpty) return snap
 
@@ -225,10 +290,12 @@ object BatchApply {
       // set the key explicitly — the spark-submit case)
       val aligned = canonicalIn.sparkSession.sessionState.conf.numShufflePartitions == snap.nBuckets
 
-      // ---- ONE merge pass, ONE write job. The persisted canonical rows
+      // ---- ONE merge pass, ONE write job. The kept canonical rows
       //      full-outer-join the resolved touched buckets (read once, and
       //      only when a COW bucket has target files or pre-images are
-      //      on), and every joined row emits a tagged stream: the merged
+      //      on) in a shuffled hash join that builds on the canonical
+      //      side, already hash-partitioned by doc_id, so neither side is
+      //      sorted; every joined row emits a tagged stream: the merged
       //      COW row or the MOR delta row, the change-feed row, and the
       //      signed pre/post-image rows. The winner decision
       //      (`c.lsn > t._lsn`) is the same expression for the data and
@@ -240,11 +307,10 @@ object BatchApply {
       val images = changelog && preimages
       val readBuckets = if (images) touched else cowBuckets
       val target = snap.files.exists(f => readBuckets(f.bucket))
-      val c = canonical.as("c")
       val joined =
-        if (!target) c
+        if (!target) canonical.as("c")
         else table.readResolved(Some(readBuckets), Some(snap)).as("t")
-          .join(c, col("t.doc_id") === col("c.doc_id"), "full_outer")
+          .join(canonical.hint("shuffle_hash").as("c"), col("t.doc_id") === col("c.doc_id"), "full_outer")
       def t(n: String): Column = if (target) col(s"t.$n") else lit(null)
       val userSchema = snap.schema
       val payload = userSchema.fieldNames.toIndexedSeq.filter(_ != "doc_id")
@@ -316,6 +382,12 @@ object BatchApply {
       val feedSets = feeds.zipWithIndex.map { case (kind, i) => LakeTable.FeedSet(kind, batchId, batchId,
         snap.schemaId, written.filter(_.kind == i + 1).map(w => table.relative(w.path))) }
       table.commit(files, cowBuckets, batchId, watermarks, lineage, snap.version, newFeeds = feedSets)
-    } finally canonical.unpersist(false)
+    } finally release()
+  }
+
+  /** One shard's offset stats over a batch's canonical rows. */
+  private final case class ShardStat(minLsn: Long, maxLsn: Long, rows: Long, hasLang: Boolean) {
+    def +(o: ShardStat): ShardStat = ShardStat(math.min(minLsn, o.minLsn),
+      math.max(maxLsn, o.maxLsn), rows + o.rows, hasLang || o.hasLang)
   }
 }

@@ -3,7 +3,7 @@ package graft.lake
 import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 
 import scala.util.matching.Regex
 
@@ -16,13 +16,13 @@ import scala.util.matching.Regex
   * atomically when the target exists; Hadoop's local
   * `create(overwrite=false)` and `!exists && rename` both let several
   * racers win), elsewhere a `rename`, which HDFS refuses onto an
-  * existing file. */
+  * existing file. The tmp file is written through [[writer]]. */
 object Commit {
 
   /** Publish `bytes` at `target` unless it exists; true iff this caller won. */
   def publish(fs: FileSystem, target: Path, bytes: Array[Byte]): Boolean = {
     val tmp = new Path(target.getParent, s".tmp-${UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
+    val out = writer(fs).create(tmp, false)
     try out.write(bytes) finally out.close()
     try {
       if (fs.getScheme != "file") fs.rename(tmp, target)
@@ -31,7 +31,19 @@ object Commit {
         try { Files.createLink(local(target), local(tmp)); true }
         catch { case _: FileAlreadyExistsException => false }
       }
-    } finally fs.delete(tmp, false)
+    } finally writer(fs).delete(tmp, false)
+  }
+
+  /** The file system a store's metadata files are written through: on
+    * `file:` the raw local one, like [[TaskWriter]]'s data files. The
+    * checksummed local file system would add a `.crc` sidecar that no
+    * reader needs (a published file is a hard link to the data alone),
+    * at the cost of one more create, and on a host without the native
+    * Hadoop library one more forked `chmod`, per file. The bytes still
+    * count in the `file` statistics. */
+  def writer(fs: FileSystem): FileSystem = fs match {
+    case local: LocalFileSystem => local.getRawFileSystem
+    case other => other
   }
 
   /** Versions of the files in `dir` whose names fully match `re`

@@ -1,7 +1,8 @@
 package graft.lake
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SessionBridge, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 
 /**
@@ -79,7 +80,8 @@ import org.apache.spark.sql.functions._
  * mixed ranges fall back automatically), and syncs must happen within
  * the feed's retention window (`changelogRetainBatches` vacuum) — the
  * standard CDC-consumer lag contract; past it, drop the store and
- * re-init. `grp` may be null-valued (null-safe merge join); `sumCol`
+ * re-init. `grp` may be null-valued (grouping puts null keys in one
+ * group, on every path); `sumCol`
  * is any SQL expression castable to long over the table's columns.
  *
  * Reference analog: DataX has no incremental consumers — each job is a
@@ -108,10 +110,10 @@ object Ivm {
     * manifest stays a trivial driver object. */
   val DefaultStateBuckets = 16
 
-  /** Changed-GROUP count up to which a sync's delta lands on the
-    * driver (one bounded collect fused with the delta aggregation)
-    * and merges as a broadcast side; above it the delta stays
-    * distributed. */
+  /** Changed-GROUP count up to which a sync's delta is summed per task
+    * and lands on the driver (one job, no aggregation plan), giving the
+    * changed state buckets and a local delta for the merge aggregation;
+    * above it the delta stays distributed. */
   val SmallDeltaMax = 1024
 
   private def pbCol(grp: Column, nb: Int): Column =
@@ -133,63 +135,49 @@ object Ivm {
       case Some(m) if m.version >= cur.version =>
         readAgg(spark, aggDir)
       case None =>
-        val full = contrib(table.read(Some(cur)), grp, sumCol)
-          .groupBy(col(grp))
-          .agg(sum(col("s")).as("cnt"),
-            sum((col("v").isNotNull.cast("long")) * col("s")).as("nnz"),
-            coalesce(sum(col("s") * col("v")), lit(0L)).as("sum0"))
-        publish(spark, aggDir, full, grp, stateBuckets,
-          cur.version, cur.batchId, prev = None, changedPbs = None, lease)
+        publish(spark, aggDir, merge(contrib(table.read(Some(cur)), grp, sumCol), grp, stateBuckets),
+          grp, stateBuckets, cur.version, cur.batchId, prev = None, changedPbs = None, lease)
         readAgg(spark, aggDir)
       case Some(m) =>
         val (rows, release) = deltaRows(table, m, cur, grp, sumCol, keyLookupMax)
         try {
-          val delta0 = rows
-            .groupBy(col(grp))
-            .agg(sum(col("s")).as("dcnt"),
-              sum((col("v").isNotNull.cast("long")) * col("s")).as("dnnz"),
-              coalesce(sum(col("s") * col("v")), lit(0L)).as("dsum"))
-            .withColumn("pb", pbCol(col(grp), m.nb))
           // bounded probe: a small per-sync delta (the common case —
-          // few groups changed) lands on the driver in the SAME job
-          // that aggregates it, giving the changed-bucket set for free
-          // and a broadcast-side merge join; a high-cardinality delta
-          // stays distributed and pays one extra distinct job for the
-          // (≤ m.nb ints) bucket set — the only driver materialization
-          val local = delta0.limit(SmallDeltaMax + 1).collect()
-          val (delta, changedPbs) =
-            if (local.length <= SmallDeltaMax)
-              (broadcast(spark.createDataFrame(
-                java.util.Arrays.asList(local: _*), delta0.schema)),
-                local.map(_.getAs[Int]("pb")).toSet)
-            else
-              (delta0, delta0.select(col("pb"))
+          // few groups changed) is summed per task and lands on the
+          // driver in one job, giving the changed-bucket set for free;
+          // a high-cardinality delta stays distributed and pays one
+          // extra distinct job for the (≤ m.nb ints) bucket set — the
+          // only driver materialization
+          val local = smallDelta(rows, grp)
+          val grpType = rows.schema(grp).dataType
+          val (delta, changedPbs) = local match {
+            case Some(groups) =>
+              val bucketOf = LakeTable.bucketOfValue(grpType, m.nb)
+              (spark.createDataFrame(java.util.Arrays.asList(groups.toSeq.map { case (g, v) =>
+                Row(CatalystTypeConverters.convertToScala(g, grpType),
+                  v(0), v(1), v(2)) }: _*), rows.schema),
+                groups.keySet.map(bucketOf))
+            case None =>
+              val delta0 = rows.groupBy(col(grp)).agg(sums.head, sums.tail: _*)
+              (delta0, delta0.select(pbCol(col(grp), m.nb))
                 .distinct().collect().map(_.getInt(0)).toSet)
+          }
           if (changedPbs.isEmpty) {
             // no net group change (metadata-only advance, or a range
             // whose changes all lost the merge / cancelled out):
             // nothing to rewrite, just move the watermark forward
             publishMetaOnly(spark, aggDir, m, cur.version, cur.batchId, lease)
           } else {
-            val stored = readStateParts(spark, aggDir, m,
-              m.parts.keySet.intersect(changedPbs))
-            val merged = stored.as("a")
-              .join(delta.as("d"), col(s"a.$grp") <=> col(s"d.$grp"), "full_outer")
-              .select(
-                coalesce(col(s"a.$grp"), col(s"d.$grp")).as(grp),
-                (coalesce(col("a.cnt"), lit(0L)) + coalesce(col("d.dcnt"), lit(0L))).as("cnt"),
-                (coalesce(col("a.nnz"), lit(0L)) + coalesce(col("d.dnnz"), lit(0L))).as("nnz"),
-                (coalesce(col("a.sum0"), lit(0L)) + coalesce(col("d.dsum"), lit(0L))).as("sum0"))
-              .filter(col("cnt") > 0)
-            publish(spark, aggDir, merged, grp, m.nb,
-              cur.version, cur.batchId, prev = Some(m), changedPbs = Some(changedPbs), lease)
+            val stored = readStateParts(spark, aggDir, m, m.parts.keySet.intersect(changedPbs))
+            publish(spark, aggDir, merge(stored.unionByName(delta), grp, m.nb),
+              grp, m.nb, cur.version, cur.batchId, prev = Some(m), changedPbs = Some(changedPbs), lease)
           }
         } finally release()
         readAgg(spark, aggDir)
     }
   }
 
-  /** Signed per-row contributions (grp, s, v) of the unsynced range —
+  /** Signed per-row contributions of the unsynced range, in state form
+    * (grp, cnt, nnz, sum0, see [[contrib]]) —
     * pure-feed when the delta feed covers it, snapshot-diff otherwise
     * — plus a release hook for the fallback's persisted key set. A
     * feed hole past the retention cutoff behaves identically on both
@@ -205,9 +193,8 @@ object Ivm {
     if (table.deltaFeedCovers(m.batchId, cur.batchId)) {
       // ---- FAST PATH: one aggregation of the signed feed rows; ZERO
       //      table reads. `sign` IS the contribution sign.
-      (table.readDeltaChanges(m.batchId, cur.batchId)
-        .select(col(grp), col("sign").cast("long").as("s"),
-          expr(sumCol).cast("long").as("v")), () => ())
+      (contrib(table.readDeltaChanges(m.batchId, cur.batchId), grp, sumCol,
+        col("sign").cast("long")), () => ())
     } else {
       // ---- FALLBACK: changed keys from the main feed, both pinned
       //      snapshots read at those keys (point-lookup or join regime)
@@ -232,21 +219,68 @@ object Ivm {
               .filter(!col(LakeTable.DeletedCol))
               .join(changed, Seq("doc_id"))
         }
-        contrib(rows, grp, sumCol, sign)
+        contrib(rows, grp, sumCol, lit(sign))
       }
       (rowsAt(cur, 1L).unionByName(rowsAt(oldSnap, -1L)), () => { changed.unpersist(); () })
     }
   }
 
-  /** Per-row contribution: group value, sign, summed value. `sumCol`
-    * is any SQL EXPRESSION castable to long — a plain column
-    * (`"n_tok"`) or a computation over wide payload columns
-    * (`"aggregate(tokens, 0L, (a, x) -> a + x)"`); the expression is
-    * evaluated identically at both pinned snapshots, so the delta
-    * algebra is unchanged. */
+  /** Per-row contribution in state form (grp, cnt, nnz, sum0): the
+    * sign, the sign where the summed value is non-null, and the signed
+    * value (0 when null). `sumCol` is any SQL EXPRESSION castable to
+    * long — a plain column (`"n_tok"`) or a computation over wide
+    * payload columns (`"aggregate(tokens, 0L, (a, x) -> a + x)"`); the
+    * expression is evaluated identically at both pinned snapshots, so
+    * the delta algebra is unchanged. */
   private def contrib(rows: DataFrame, grp: String, sumCol: String,
-      sign: Long = 1L): DataFrame =
-    rows.select(col(grp), lit(sign).as("s"), expr(sumCol).cast("long").as("v"))
+      sign: Column = lit(1L)): DataFrame = {
+    val v = expr(sumCol).cast("long")
+    rows.select(col(grp), sign.as("cnt"), (v.isNotNull.cast("long") * sign).as("nnz"),
+      coalesce(v * sign, lit(0L)).as("sum0"))
+  }
+
+  /** The per-group sums (cnt, nnz, sum0) of state-form `rows`, folded
+    * per task and merged on the driver; None once they hold more than
+    * [[SmallDeltaMax]] groups. Overflow fails loudly, like the SQL sum
+    * under ANSI. */
+  private def smallDelta(rows: DataFrame, grp: String): Option[Map[Any, Array[Long]]] = {
+    val grpType = rows.schema(grp).dataType
+    val at = Seq(grp, "cnt", "nnz", "sum0").map(rows.schema.fieldIndex)
+    def add(into: scala.collection.mutable.Map[Any, Array[Long]], g: Any, v: Array[Long]): Unit = {
+      val acc = into.getOrElseUpdate(g, new Array[Long](3))
+      for (i <- 0 until 3) acc(i) = Math.addExact(acc(i), v(i))
+    }
+    val parts = SessionBridge.fold(rows) { it =>
+      val acc = scala.collection.mutable.HashMap.empty[Any, Array[Long]]
+      while (it.hasNext && acc.size <= SmallDeltaMax) {
+        val r = it.next()
+        add(acc, InternalRow.copyValue(r.get(at(0), grpType)),
+          Array(r.getLong(at(1)), r.getLong(at(2)), r.getLong(at(3))))
+      }
+      if (acc.size > SmallDeltaMax) None else Some(acc.toMap)
+    }
+    if (parts.contains(None)) return None
+    val all = scala.collection.mutable.HashMap.empty[Any, Array[Long]]
+    parts.flatten.foreach(_.foreach { case (g, v) => add(all, g, v) })
+    if (all.size > SmallDeltaMax) None else Some(all.toMap)
+  }
+
+  /** Summing state-form rows gives state-form rows. */
+  private val sums: Seq[Column] =
+    Seq("cnt", "nnz", "sum0").map(c => sum(col(c)).as(c))
+
+  /** The state rows of `rows` (state form, a group in any number of
+    * rows): ONE aggregation grouped by (state bucket, grp), with the
+    * rows first partitioned by the state bucket, so each bucket's
+    * groups end in one task and the write needs no further exchange.
+    * Grouping treats null keys as one group, so a null `grp` merges
+    * exactly like any other value; extinct groups (cnt 0) drop. */
+  private def merge(rows: DataFrame, grp: String, nb: Int): DataFrame =
+    rows.withColumn("pb", pbCol(col(grp), nb))
+      .repartition(col("pb"))
+      .groupBy(col("pb"), col(grp))
+      .agg(sums.head, sums.tail: _*)
+      .filter(col("cnt") > 0)
 
   /** The maintained aggregate (grp, cnt, sum_val) as last published.
     * `sum_val` is NULL for a group whose summed values were all null —
@@ -318,8 +352,10 @@ object Ivm {
   }
 
   /** Write the given state rows (all buckets on init, changed buckets
-    * on sync) into a fresh `data-<uuid>` dir, one `pb=<j>/` subdir per
-    * bucket, in one task-side write job ([[TaskWriter]]), then
+    * on sync; [[merge]]'s output, so `pb` then the state columns, each
+    * bucket in one partition) into a fresh `data-<uuid>` dir, one
+    * `pb=<j>/` subdir per bucket, in one task-side write job
+    * ([[TaskWriter]]), then
     * CAS-publish the next manifest mapping changed buckets to the new
     * dir and unchanged buckets to their existing dirs. On a CAS loss
     * the new data dir is deleted and the loser throws. After a win,
@@ -331,20 +367,21 @@ object Ivm {
     val fs = new Path(aggDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirName = s"data-${java.util.UUID.randomUUID().toString.take(8)}"
     val grpDdl = prev.map(_.grpDdl).getOrElse {
-      val f = rows.schema.fields.find(_.name == grp).get
+      val f = rows.schema(grp)
       s"`${f.name}` ${f.dataType.sql}"
     }
     val nextV = prev.fold(0L)(_.manifestVersion) + 1L
     val parts = try {
       val dir = s"$aggDir/$dirName"
-      val tagged = rows.select(lit(0).as("kind"), pbCol(col(grp), nb).as("bucket"),
-        col(grp).as("key"), struct(rows.columns.toIndexedSeq.map(col): _*))
+      val state = rows.drop("pb")
+      val tagged = rows.select(lit(0).as("kind"), col("pb").as("bucket"),
+        col(grp).as("key"), struct(state.columns.toIndexedSeq.map(col): _*))
       // which buckets actually hold rows now (a changed bucket whose
       // groups all went extinct writes no file and leaves the manifest);
       // a bucket's dir is read whole, so a failed task attempt's files
       // must not stay in it
-      val written = TaskWriter.write(tagged.repartition(col("bucket")),
-        IndexedSeq(TaskWriter.Out(dir, LakeTable.asNullable(rows.schema), bucketDir = Some("pb"))))
+      val written = TaskWriter.write(tagged,
+        IndexedSeq(TaskWriter.Out(dir, LakeTable.asNullable(state.schema), bucketDir = Some("pb"))))
         .groupBy(_.bucket)
       written.foreach { case (pb, ws) =>
         TaskWriter.keepOnlyReported(spark.sparkContext.hadoopConfiguration, s"$dir/pb=$pb", ws)

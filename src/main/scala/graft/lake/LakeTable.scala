@@ -2,7 +2,7 @@ package graft.lake
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -180,6 +180,16 @@ object LakeTable {
     * [[graft.apply.BatchApply]]). */
   def bucketExpr(docId: org.apache.spark.sql.Column, nBuckets: Int): org.apache.spark.sql.Column =
     pmod(hash(docId), lit(nBuckets)).cast("int")
+
+  /** [[bucketExpr]] of one Catalyst value of type `t`, as interpreted
+    * expressions: no job and no generated class, on the driver or in a
+    * task. */
+  private[graft] def bucketOfValue(t: DataType, nBuckets: Int): Any => Int = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Murmur3Hash, Pmod}
+    val e = Pmod(new Murmur3Hash(Seq(BoundReference(0, t, nullable = true))), Literal(nBuckets))
+    v => e.eval(InternalRow(v)).asInstanceOf[Int]
+  }
 
   /** Auto-pick a bucket count from table size: smallest power of two
     * with at most `targetRowsPerBucket` rows per bucket, clamped to
@@ -411,7 +421,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * orphan from a lost commit race is vacuumed). */
   private def writeManifest(m: Manifest): String = {
     val rel = s"manifests/m-${UUID.randomUUID()}.json"
-    val out = fs.create(new Path(root, rel))
+    val out = Commit.writer(fs).create(new Path(root, rel))
     try out.write(JsonMethods.pretty(manifestToJson(m)).getBytes("UTF-8")) finally out.close()
     rel
   }
@@ -424,7 +434,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
 
   /** Physical rows (tombstones + system cols included), aligned to the
     * current schema. `buckets=Some(set)` prunes the scan to those buckets
-    * using manifest metadata only. */
+    * using manifest metadata only; the files come from the snapshot,
+    * so nothing is listed. */
   def readPhysical(buckets: Option[Set[Int]] = None, snapshot: Option[Snapshot] = None): DataFrame = {
     val s = snapshot.getOrElse(current)
     val files = buckets match {
@@ -436,12 +447,26 @@ class LakeTable(val spark: SparkSession, val root: String) {
     else {
       // group by schema-id; align older files to the current schema:
       // missing columns -> null, widened columns -> cast (additive only)
-      files.groupBy(_.schemaId).map { case (sid, fl) =>
-        val df = spark.read.schema(s.physicalSchema(sid))
-          .parquet(fl.map(f => s"$root/${f.path}"): _*)
-        align(df, targetPhys)
+      files.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (sid, fl) =>
+        align(scan(s.physicalSchema(sid), fl.map(_.path)), targetPhys)
       }.reduce(_ unionByName _)
     }
+  }
+
+  /** A parquet scan of root-relative `paths` at `schema`. */
+  private def scan(schema: StructType, paths: Seq[String]): DataFrame =
+    SnapshotRead.scan(spark, root, schema, paths.map(status))
+
+  /** File statuses, each taken once: a table's files never change
+    * after they are written. Bounded like the snapshot cache. */
+  private val statuses = new java.util.concurrent.ConcurrentHashMap[String, FileStatus]()
+
+  private def status(rel: String): FileStatus = {
+    if (statuses.size > 100000) statuses.clear()
+    statuses.computeIfAbsent(rel, _ => {
+      val st = fs.getFileStatus(new Path(root, rel))
+      new FileStatus(st.getLen, false, 1, st.getBlockSize, st.getModificationTime, st.getPath)
+    })
   }
 
   private def align(df: DataFrame, target: StructType): DataFrame = {
@@ -456,30 +481,14 @@ class LakeTable(val spark: SparkSession, val root: String) {
 
   /** Physical rows RESOLVED to one row per key: where a bucket carries
     * merge-on-read delta files, base and delta rows collapse to the
-    * max-`_lsn` winner per doc_id. Buckets without deltas skip the
-    * resolution shuffle entirely (plain COW read path). */
+    * max-`_lsn` winner per doc_id, one task per bucket with no shuffle
+    * ([[SnapshotRead.merged]]). Reads without deltas are plain COW
+    * scans. */
   def readResolved(buckets: Option[Set[Int]] = None, snapshot: Option[Snapshot] = None): DataFrame = {
     val s = snapshot.getOrElse(current)
-    val wanted: DataFile => Boolean = buckets match {
-      case Some(bs) => f => bs.contains(f.bucket)
-      case None => _ => true
-    }
-    val deltaBuckets = s.files.filter(f => f.delta && wanted(f)).map(_.bucket).toSet
-    if (deltaBuckets.isEmpty) readPhysical(buckets, Some(s))
-    else {
-      val plainBuckets = s.files.filter(wanted).map(_.bucket).toSet -- deltaBuckets
-      val physCols = s.physicalSchema(s.schemaId).fieldNames.toSeq
-      val payload = struct(physCols.map(col): _*)
-      val resolved = readPhysical(Some(deltaBuckets), Some(s))
-        .groupBy(col("doc_id"))
-        .agg(max_by(payload, col(LsnCol)).as("w"))
-        // doc_id from the grouping key, not the struct: the output then
-        // keeps the aggregate's hash(doc_id) partitioning, so a join on
-        // doc_id needs no second exchange
-        .select(physCols.map(c => if (c == "doc_id") col(c) else col(s"w.$c").as(c)): _*)
-      if (plainBuckets.isEmpty) resolved
-      else readPhysical(Some(plainBuckets), Some(s)).unionByName(resolved)
-    }
+    val files = s.files.filter(f => buckets.forall(_.contains(f.bucket)))
+    if (!files.exists(_.delta)) readPhysical(buckets, Some(s))
+    else SnapshotRead.merged(spark, s, files.map(f => f -> status(f.path)))
   }
 
   /** User-visible rows: deltas resolved, tombstones filtered, system
@@ -494,25 +503,26 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * metadata (no file listing, no full scan) and the typed IN filter
     * additionally pushes into the parquet scan for row-group skipping
     * INSIDE each selected bucket — so fetching k keys from a 10^10-row
-    * table reads at most k buckets' files, not the table. Keys are
-    * rendered through one LocalRelation-backed job (bounded by |keys|,
-    * touches no files) so the literals take the table's exact key type —
-    * the same `bucketExpr` hash the writer used; a mistyped literal
-    * would hash to the wrong bucket and silently miss, so the cast is
-    * the correctness step, not a convenience. */
+    * table reads at most k buckets' files, not the table. Each key is
+    * cast to the table's exact key type and hashed with the writer's
+    * `bucketExpr` on the driver (interpreted expressions: no job, no
+    * generated class) — a mistyped literal would hash to the wrong
+    * bucket and silently miss, so the cast is the correctness step,
+    * not a convenience. */
   def readKeys(keys: Seq[Any], snapshot: Option[Snapshot] = None): DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     val s = snapshot.getOrElse(current)
     if (keys.isEmpty) return read(Some(s)).limit(0)
     val keyType = s.physicalSchema(s.schemaId)("doc_id").dataType
-    import spark.implicits._
-    val info = keys.map(String.valueOf).toDF("k")
-      .select(col("k").cast(keyType).as("doc_id"))
-      .select(col("doc_id"), bucketExpr(col("doc_id"), s.nBuckets).as("b"))
-      .collect()
-    val buckets = info.map(_.getInt(1)).toSet
-    val typed = info.map(_.get(0)).toIndexedSeq
-    readResolved(Some(buckets), Some(s))
-      .filter(col("doc_id").isInCollection(typed))
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    val bucketOf = bucketOfValue(keyType, s.nBuckets)
+    val info = keys.map { k =>
+      val v = Cast(Literal.create(String.valueOf(k), StringType), keyType, tz).eval()
+      (CatalystTypeConverters.convertToScala(v, keyType), bucketOf(v))
+    }
+    readResolved(Some(info.map(_._2).toSet), Some(s))
+      .filter(col("doc_id").isInCollection(info.map(_._1)))
       .filter(!col(DeletedCol)).drop(LsnCol, DeletedCol)
   }
 
@@ -626,8 +636,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val schemaOf = feedSchemaOf(kind)
     val target = schemaOf(s.schema)
     sets.filter(_.files.nonEmpty).groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (sid, fl) =>
-      align(spark.read.schema(schemaOf(s.schemas(sid))).parquet(fl.flatMap(_.files).map(f => s"$root/$f"): _*),
-        target)
+      align(scan(schemaOf(s.schemas(sid)), fl.flatMap(_.files)), target)
     }.reduceOption(_ unionByName _).getOrElse(emptyFrame(target))
   }
 

@@ -250,6 +250,50 @@ class IvmSpec extends AnyFunSuite {
       "incremental path must keep the all-null group NULL on both stores")
   }
 
+  test("a null group key stays exact through init, pure-feed and fallback syncs") {
+    val dir = tmpDir("ivm-nullgrp")
+    val table = Replay.createTable(spark, s"$dir/t", nBuckets = 4)
+    val agg = s"$dir/agg"
+    // live rows whose `source` is null: a hand-built frame (generated
+    // events null the source of deletes only)
+    import spark.implicits._
+    def frame(rows: Seq[(String, Long, String, Int, String)]) =
+      rows.map { case (d, l, op, nt, src) =>
+        (d, l, op, if (op == "D") null else Seq.fill(nt)(1),
+          if (op == "D") null else java.lang.Long.valueOf(nt.toLong), src, null.asInstanceOf[String], 0)
+      }.toDF("doc_id", "lsn", "op", "tokens", "n_tok", "source", "lang", "shard")
+    def directNull(): Set[(Option[String], Long, Long)] =
+      table.read().groupBy("source").agg(count(lit(1)), sum(col("n_tok").cast("long")))
+        .collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
+    def servedNull(df: DataFrame): Set[(Option[String], Long, Long)] =
+      df.collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
+
+    // init: two docs in the null group, one in "a"
+    BatchApply.apply(table, frame(Seq(("n1", 1L, "I", 3, null), ("n2", 2L, "I", 4, null),
+      ("a1", 3L, "I", 5, "a"))), batchId = 0, changelog = true, preimages = true)
+    val init = servedNull(Ivm.sync(table, agg))
+    assert(init == directNull() && init.contains((None, 2L, 7L)), s"init: $init")
+
+    // pure feed: n1 leaves the null group, a1 joins it, n3 is new in it
+    BatchApply.apply(table, frame(Seq(("n1", 10L, "U", 6, "a"), ("a1", 11L, "U", 2, null),
+      ("n3", 12L, "I", 1, null))), batchId = 1, changelog = true, preimages = true)
+    assert(table.deltaFeedCovers(0L, 1L))
+    val feed = servedNull(Ivm.sync(table, agg))
+    assert(feed == directNull() && feed.contains((None, 3L, 7L)), s"pure feed: $feed")
+
+    // fallback (no pre-images): n2 leaves for "b", n1 comes back, n3 is
+    // deleted; then a range that empties the null group entirely
+    BatchApply.apply(table, frame(Seq(("n2", 20L, "U", 4, "b"), ("n1", 21L, "U", 6, null),
+      ("n3", 22L, "D", 0, null))), batchId = 2, changelog = true)
+    assert(!table.deltaFeedCovers(1L, 2L))
+    val fallback = servedNull(Ivm.sync(table, agg))
+    assert(fallback == directNull() && fallback.contains((None, 2L, 8L)), s"fallback: $fallback")
+    BatchApply.apply(table, frame(Seq(("n1", 30L, "U", 6, "a"), ("a1", 31L, "D", 0, null))),
+      batchId = 3, changelog = true, preimages = true)
+    val extinct = servedNull(Ivm.sync(table, agg))
+    assert(extinct == directNull() && !extinct.exists(_._1.isEmpty), s"extinct: $extinct")
+  }
+
   test("writer lease: a zombie sync is fenced loudly") {
     import graft.lake.WriterLease
     val dir = tmpDir("ivm-lease")

@@ -5,7 +5,9 @@ import graft.gen.ChangeLogGen
 import graft.model.{ChangeEvent, GenConfig}
 import graft.stream.Replay
 import graft.verify.Oracle
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -61,6 +63,19 @@ class MergeOnReadSpec extends AnyFunSuite {
     val all = base.unionByName(toDF(upd))
     val mism = Oracle.diff(Oracle.expectedState(spark, all), table.read())
     assert(mism.isEmpty, mism.mkString("; "))
+
+    // a sparse batch that adds `lang` (and widens `n_tok`) lands as
+    // delta files of the evolved schema over base files of the first:
+    // the read aligns both schemas before it resolves
+    val evo = sparseUpdates(new Random(6), lsnFrom = 200000, n = 60, docSpace = baseCfg.nDocs)
+      .map(_.copy(lang = "en"))
+    BatchApply.apply(table, toDF(evo), batchId = 2)
+    val evolved = table.current
+    assert(evolved.schemaId != snap.schemaId &&
+      evolved.files.exists(f => f.delta && f.schemaId == evolved.schemaId) &&
+      evolved.files.exists(_.schemaId == snap.schemaId))
+    val evoMism = Oracle.diff(Oracle.expectedState(spark, all.unionByName(toDF(evo))), table.read())
+    assert(evoMism.isEmpty, evoMism.mkString("; "))
     base.unpersist()
   }
 
@@ -103,5 +118,46 @@ class MergeOnReadSpec extends AnyFunSuite {
     table.compact()
     assert(table.current.files.forall(!_.delta))
     assert(table.read().orderBy("doc_id").collect().sameElements(before))
+  }
+
+  test("reads past 32 live files take the snapshot's files: no job before the action, rows exact") {
+    val dir = tmpDir("graft-mor-files")
+    val baseCfg = GenConfig(nEvents = 4000, nDocs = 2000, nShards = 4,
+      pctInsert = 100, pctUpdate = 0, avgTokens = 8)
+    val base = ChangeLogGen.events(spark, baseCfg).cache()
+    val table = Replay.createTable(spark, s"$dir/t", nBuckets = 40)
+    BatchApply.apply(table, base, batchId = 0, changelog = true, preimages = true)
+    val upd = sparseUpdates(new Random(11), 100000, n = 40, docSpace = baseCfg.nDocs)
+    BatchApply.apply(table, toDF(upd), batchId = 1, changelog = true, preimages = true)
+    val snap = table.current
+    assert(snap.files.size > 32 && snap.files.exists(_.delta), s"${snap.files.size} live files")
+
+    // build every read frame with a listener on: Spark lists more than
+    // 32 paths in a parallel job, a snapshot read lists nothing
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.details).mkString("\n"))
+    }
+    val keys = upd.map(_.doc_id).distinct.take(10)
+    spark.sparkContext.addSparkListener(listener)
+    val (physical, resolved, looked, changes, images) = try {
+      val frames = (table.readPhysical(), table.read(), table.readKeys(keys),
+        table.readChanges(-1L), table.readDeltaChanges(-1L))
+      Thread.sleep(1000) // the listener bus is asynchronous
+      frames
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.isEmpty, jobs.toArray.mkString("\n----\n"))
+
+    val expected = Oracle.expectedState(spark, base.unionByName(toDF(upd)))
+    val mism = Oracle.diff(expected, resolved)
+    assert(mism.isEmpty, mism.mkString("; "))
+    val lookMism = Oracle.diff(expected.filter(col("doc_id").isin(keys: _*)), looked)
+    assert(lookMism.isEmpty, lookMism.mkString("; "))
+    assert(physical.count() == snap.files.map(_.rows).sum)
+    val canonical = base.select("doc_id").distinct().count() + upd.map(_.doc_id).distinct.size
+    assert(changes.count() == canonical)
+    assert(images.filter(col("sign") === 1).count() == canonical)
+    base.unpersist()
   }
 }

@@ -237,7 +237,7 @@ class TaskWriterSpec extends AnyFunSuite {
     assert(applyJobs.size <= 6, applyJobs.mkString("\n----\n"))
     assert(!applyJobs.exists(_.contains("footerStats")))
     val syncJobs = jobsOf(Ivm.sync(table, s"$dir/agg").collect())
-    assert(syncJobs.nonEmpty)
+    assert(syncJobs.nonEmpty && syncJobs.size <= 5, syncJobs.mkString("\n----\n"))
     assert(!syncJobs.exists(_.contains("DataFrameReader.parquet")), syncJobs.mkString("\n----\n"))
     val direct = table.read().groupBy("source").agg(count(lit(1)).as("cnt"), sum("n_tok").as("s"))
     assert(rows(Ivm.readAgg(spark, s"$dir/agg")) == rows(direct))
