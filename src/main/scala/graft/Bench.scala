@@ -42,8 +42,9 @@ import org.apache.spark.sql.SparkSession
  *
  *     A second, smaller probe measures hot-key skew handling (axis B)
  *     on one 80%-single-key log, salted vs unsalted, for BOTH aggregate
- *     classes: the algebraic canonicalize (a keyed fold — salting measured
- *     unnecessary, map-side partials absorb the skew) and the
+ *     classes: the algebraic canonicalize (a keyed fold — map-side
+ *     partials absorb the skew, so it ignores the salt and both figures
+ *     time the same fold) and the
  *     non-algebraic change-history collect ([[graft.operators
  *     .ChangeHistory]] — the regime where range-salting wins).
  *
@@ -327,8 +328,8 @@ object Bench {
       // path so the numbers are the aggregates' own:
       //  - canonicalize (keyed fold): ALGEBRAIC — map-side combine collapses
       //    the hot key to one row per map task, so salting buys nothing
-      //    at any skew level (this rung documents the measured non-need
-      //    and why BatchApply defaults saltBuckets=1);
+      //    at any skew level; canonicalize ignores its salt, and the
+      //    salted figure times the same fold (a run-to-run spread);
       //  - change history (collect_list): NON-algebraic — partials can't
       //    shrink the hot key below its event count, one reducer eats
       //    80% of the log; the range-salted two-phase plan

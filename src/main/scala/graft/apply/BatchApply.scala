@@ -34,8 +34,8 @@ import org.apache.spark.sql.types._
  *
  * Scale/skew notes: `canonicalize` is a keyed fold with a map-side
  * combine, so a hot doc_id (Zipf skew, axis B) collapses to one row per
- * input partition before the shuffle; `saltBuckets > 1` adds an explicit
- * two-phase pre-aggregation for extreme single-key skew. The MERGE join
+ * input partition before the shuffle, which is all a salted two-phase
+ * pre-aggregation would add. The MERGE join
  * sees at most one row per key per side, hence no join skew. COW cost is
  * bounded by bucket granularity: only buckets containing changed keys are
  * read and rewritten (manifest-pruned, never a full-table scan).
@@ -59,34 +59,18 @@ object BatchApply {
     * partitioning on `doc_id` (shuffle-partition count), which the frame
     * declares: the merge join needs no second exchange of this side.
     * It runs no aggregation plan, so no class is generated for it.
-    * `saltBuckets > 1` keeps the explicit two-phase salted aggregation.
+    * `saltBuckets` has no effect: the map-side combine already collapses
+    * a hot key before the shuffle, which is what salting was for. It is
+    * kept for the callers that pass it ([[graft.stream.Replay]], the
+    * job spec's `writer.saltBuckets`, the `graft.Bench` skew probe).
     *
     * A payload column the input lacks reads as null: the change feed of
     * a table that never evolved carries no `lang`. */
   def canonicalize(events: DataFrame, saltBuckets: Int = 1): DataFrame = {
     def in(n: String): Column =
       if (events.columns.contains(n)) col(n) else lit(null).cast(ChangeLog.schema(n).dataType).as(n)
-    val changes = events.select(col("doc_id"), col("lsn").cast(LongType).as("lsn"), col("op"),
-      in("tokens"), in("n_tok"), in("source"), in("lang"), col("shard"))
-    if (saltBuckets <= 1) return latestPerKey(changes)
-    val payload = struct(
-      col("lsn"), col("op"), col("tokens"), col("n_tok"), col("source"), col("lang"), col("shard"))
-    changes
-      // two-phase for hot keys: salt pre-aggregation, then merge the
-      // per-salt winners AND their partial stats
-      .groupBy(col("doc_id"), pmod(col("lsn"), lit(saltBuckets.toLong)).as("_salt"))
-      .agg(max_by(payload, col("lsn")).as("w"), count(lit(1)).as("n_events"),
-        min(col("lsn")).as("min_lsn"), max(col("lang").isNotNull.cast("int")).as("has_lang"),
-        max((col("op") === "I").cast("int")).as("has_insert"))
-      .groupBy(col("doc_id"))
-      .agg(max_by(col("w"), col("w.lsn")).as("w"), sum(col("n_events")).as("n_events"),
-        min(col("min_lsn")).as("min_lsn"), max(col("has_lang")).as("has_lang"),
-        max(col("has_insert")).as("has_insert"))
-      .select(col("doc_id"), col("w.lsn").as("lsn"), col("w.op").as("op"),
-        col("w.tokens").as("tokens"), col("w.n_tok").as("n_tok"),
-        col("w.source").as("source"), col("w.lang").as("lang"), col("w.shard").as("shard"),
-        col("n_events").cast("long").as("n_events"), col("min_lsn"), col("has_lang"),
-        col("has_insert"))
+    latestPerKey(events.select(col("doc_id"), col("lsn").cast(LongType).as("lsn"), col("op"),
+      in("tokens"), in("n_tok"), in("source"), in("lang"), col("shard")))
   }
 
   /** [[canonicalize]]'s fold over `changes` (doc_id, lsn, op, tokens,
@@ -164,6 +148,12 @@ object BatchApply {
   /** Max stacked delta files per bucket before a COW is forced (bounds
     * read-side resolution work). */
   val DefaultMaxDeltaChain = 4
+
+  /** Canonical rows per partition up to which the merge join builds an
+    * in-memory hash table of them (a shuffled hash join: no sort, but
+    * its table cannot spill, so it holds at most this many rows per
+    * task); a larger batch takes the sort-merge join. */
+  val HashJoinMaxRows = 65536
 
   /** The `assumeOrdered` input fence: drop events at-or-below the given
     * per-shard watermarks (only sound when micro-batches arrive in
@@ -266,6 +256,8 @@ object BatchApply {
       val changedPerBucket = folds.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _)
       val touched = changedPerBucket.keySet
       if (touched.isEmpty) return snap
+      // each fold is one partition of the kept canonical rows
+      val smallBuild = folds.forall(_._2.values.sum <= HashJoinMaxRows)
 
       // ---- write-mode decision per bucket (COW vs merge-on-read delta)
       val baseRows = snap.files.filter(f => !f.delta && touched(f.bucket))
@@ -293,9 +285,12 @@ object BatchApply {
       // ---- ONE merge pass, ONE write job. The kept canonical rows
       //      full-outer-join the resolved touched buckets (read once, and
       //      only when a COW bucket has target files or pre-images are
-      //      on) in a shuffled hash join that builds on the canonical
-      //      side, already hash-partitioned by doc_id, so neither side is
-      //      sorted; every joined row emits a tagged stream: the merged
+      //      on). The canonical side is already hash-partitioned by
+      //      doc_id; while its partitions are small
+      //      ([[HashJoinMaxRows]]) the join is a shuffled hash join that
+      //      builds on it, so neither side is sorted, and otherwise
+      //      Spark's sort-merge join, which spills. Every joined row
+      //      emits a tagged stream: the merged
       //      COW row or the MOR delta row, the change-feed row, and the
       //      signed pre/post-image rows. The winner decision
       //      (`c.lsn > t._lsn`) is the same expression for the data and
@@ -310,7 +305,8 @@ object BatchApply {
       val joined =
         if (!target) canonical.as("c")
         else table.readResolved(Some(readBuckets), Some(snap)).as("t")
-          .join(canonical.hint("shuffle_hash").as("c"), col("t.doc_id") === col("c.doc_id"), "full_outer")
+          .join((if (smallBuild) canonical.hint("shuffle_hash") else canonical).as("c"),
+            col("t.doc_id") === col("c.doc_id"), "full_outer")
       def t(n: String): Column = if (target) col(s"t.$n") else lit(null)
       val userSchema = snap.schema
       val payload = userSchema.fieldNames.toIndexedSeq.filter(_ != "doc_id")

@@ -135,7 +135,12 @@ object Ivm {
       case Some(m) if m.version >= cur.version =>
         readAgg(spark, aggDir)
       case None =>
-        publish(spark, aggDir, merge(contrib(table.read(Some(cur)), grp, sumCol), grp, stateBuckets),
+        // summed per group first, with a map-side combine: merge's
+        // exchange then moves about one row per group and task, not
+        // one per table row
+        val perGroup = contrib(table.read(Some(cur)), grp, sumCol)
+          .groupBy(col(grp)).agg(sums.head, sums.tail: _*)
+        publish(spark, aggDir, merge(perGroup, grp, stateBuckets),
           grp, stateBuckets, cur.version, cur.batchId, prev = None, changedPbs = None, lease)
         readAgg(spark, aggDir)
       case Some(m) =>
@@ -273,6 +278,8 @@ object Ivm {
     * rows): ONE aggregation grouped by (state bucket, grp), with the
     * rows first partitioned by the state bucket, so each bucket's
     * groups end in one task and the write needs no further exchange.
+    * Nothing is combined before that exchange, so `rows` should hold
+    * few rows per group (stored state plus a delta, or per-group sums).
     * Grouping treats null keys as one group, so a null `grp` merges
     * exactly like any other value; extinct groups (cnt 0) drop. */
   private def merge(rows: DataFrame, grp: String, nb: Int): DataFrame =

@@ -482,13 +482,18 @@ class LakeTable(val spark: SparkSession, val root: String) {
   /** Physical rows RESOLVED to one row per key: where a bucket carries
     * merge-on-read delta files, base and delta rows collapse to the
     * max-`_lsn` winner per doc_id, one task per bucket with no shuffle
-    * ([[SnapshotRead.merged]]). Reads without deltas are plain COW
-    * scans. */
+    * ([[SnapshotRead.merged]]). Buckets without deltas are plain COW
+    * scans ([[readPhysical]]: vectorized, split, filters pushed). */
   def readResolved(buckets: Option[Set[Int]] = None, snapshot: Option[Snapshot] = None): DataFrame = {
     val s = snapshot.getOrElse(current)
     val files = s.files.filter(f => buckets.forall(_.contains(f.bucket)))
-    if (!files.exists(_.delta)) readPhysical(buckets, Some(s))
-    else SnapshotRead.merged(spark, s, files.map(f => f -> status(f.path)))
+    val deltaBuckets = files.filter(_.delta).map(_.bucket).toSet
+    if (deltaBuckets.isEmpty) return readPhysical(buckets, Some(s))
+    val resolved = SnapshotRead.merged(spark, s,
+      files.filter(f => deltaBuckets(f.bucket)).map(f => f -> status(f.path)))
+    val plainBuckets = files.map(_.bucket).toSet -- deltaBuckets
+    if (plainBuckets.isEmpty) resolved
+    else readPhysical(Some(plainBuckets), Some(s)).unionByName(resolved)
   }
 
   /** User-visible rows: deltas resolved, tombstones filtered, system
@@ -540,9 +545,11 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * full (last-wins resolution needs every version the bucket holds —
     * a file-level cut inside the bucket could crown a stale winner);
     * there the `_lsn >= since` filter still pushes into the parquet
-    * scan of COW buckets for row-group skipping. Returns user columns
-    * plus `last_lsn` — the per-row high-watermark consumers checkpoint
-    * so their next export is `readUpdatedSince(prevMax + 1)`. */
+    * scan of buckets without delta files for row-group skipping (a
+    * bucket with deltas is resolved first and filtered after). Returns
+    * user columns plus `last_lsn` — the per-row high-watermark
+    * consumers checkpoint so their next export is
+    * `readUpdatedSince(prevMax + 1)`. */
   def readUpdatedSince(sinceLsn: Long, snapshot: Option[Snapshot] = None): DataFrame = {
     val s = snapshot.getOrElse(current)
     val hot = s.files.filter(_.maxLsn >= sinceLsn).map(_.bucket).toSet

@@ -22,9 +22,10 @@ import org.apache.spark.sql.types.StructType
  *   - [[SnapshotRead.scan]]: Spark's parquet scan over a fixed file
  *     list, with column pruning and filter pushdown as usual.
  *   - [[SnapshotRead.merged]]: the merge-on-read resolution of whole
- *     buckets, one task per bucket, with no shuffle and no aggregation
- *     plan. A bucket's base files hold each key at most once (every
- *     base write rewrites the whole bucket from resolved rows); its
+ *     buckets that carry delta files, one task per bucket, with no
+ *     shuffle and no aggregation plan. A bucket's base files hold each
+ *     key at most once (every base write rewrites the whole bucket from
+ *     resolved rows); its
  *     delta files overlay them. The task reads the delta files into a
  *     map of each key's max-`_lsn` row, streams the base files, emits
  *     the later of base row and delta row per key, then the delta rows
@@ -49,8 +50,10 @@ private[lake] object SnapshotRead {
     spark.baseRelationToDataFrame(new MergedBuckets(spark, s, files))
 }
 
-/** [[SnapshotRead.merged]]'s relation: one task per bucket. Only
-  * filters on the key reach the parquet readers (they skip row groups):
+/** [[SnapshotRead.merged]]'s relation: one task per bucket. Files are
+  * read at the asked-for columns plus the key and `_lsn`, which
+  * resolution needs. Only filters on the key reach the parquet
+  * readers (they skip row groups):
   * resolution is per key, so dropping other keys' rows first is exact,
   * while a filter on any other column could drop the row that wins.
   * Spark applies every filter again to the resolved rows. */
@@ -66,7 +69,9 @@ private final class MergedBuckets(spark: SparkSession, s: LakeTable.Snapshot,
   override def needConversion: Boolean = false
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val target = schema
+    // resolution needs only the key and `_lsn` beyond what is asked for
+    val wanted = requiredColumns.toSet + "doc_id" + LakeTable.LsnCol
+    val target = StructType(schema.filter(f => wanted(f.name)))
     val keyAt = target.fieldIndex("doc_id")
     val lsnAt = target.fieldIndex(LakeTable.LsnCol)
     val keyType = target(keyAt).dataType
@@ -84,10 +89,11 @@ private final class MergedBuckets(spark: SparkSession, s: LakeTable.Snapshot,
     // schema into the conf it is given, so readers sharing one conf
     // read every schema id at the last one's types
     val readers = files.map(_._1.schemaId).distinct.map { sid =>
-      val phys = s.physicalSchema(sid)
+      val phys = StructType(s.physicalSchema(sid).filter(f => wanted(f.name)))
       val pushed = if (phys("doc_id").dataType == keyType) onKey else Nil
-      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, phys, new StructType(),
-        phys, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, s.physicalSchema(sid),
+        new StructType(), phys, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
       val align =
         if (phys == target) None
         else Some(target.fields.toSeq.map { f =>

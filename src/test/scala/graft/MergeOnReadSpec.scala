@@ -5,9 +5,10 @@ import graft.gen.ChangeLogGen
 import graft.model.{ChangeEvent, GenConfig}
 import graft.stream.Replay
 import graft.verify.Oracle
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -159,5 +160,64 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(changes.count() == canonical)
     assert(images.filter(col("sign") === 1).count() == canonical)
     base.unpersist()
+  }
+
+  test("buckets with and without deltas resolve together, at any column subset") {
+    val dir = tmpDir("graft-mor-mixed")
+    val baseCfg = GenConfig(nEvents = 6000, nDocs = 3000, nShards = 4,
+      pctInsert = 100, pctUpdate = 0, avgTokens = 8)
+    val base = ChangeLogGen.events(spark, baseCfg).cache()
+    val table = Replay.createTable(spark, s"$dir/t", nBuckets = 16)
+    BatchApply.apply(table, base, batchId = 0)
+    val upd = sparseUpdates(new Random(21), 100000, n = 3, docSpace = baseCfg.nDocs)
+    BatchApply.apply(table, toDF(upd), batchId = 1)
+    val deltaBuckets = table.current.files.filter(_.delta).map(_.bucket).toSet
+    assert(deltaBuckets.nonEmpty && deltaBuckets.size < 16, s"delta buckets: $deltaBuckets")
+
+    val expected = Oracle.expectedState(spark, base.unionByName(toDF(upd)))
+    val mism = Oracle.diff(expected, table.read())
+    assert(mism.isEmpty, mism.mkString("; "))
+    // a read of a few columns prunes the rest, in resolved buckets too
+    def totals(df: DataFrame) = df.agg(count(lit(1)), sum(col("n_tok"))).head()
+    assert(totals(table.read().select("n_tok")) == totals(expected))
+    assert(table.read().select("doc_id").distinct().count() == expected.count())
+    val since = table.readUpdatedSince(100000L)
+    assert(since.select("doc_id").collect().map(_.getString(0)).toSet == upd.map(_.doc_id).toSet)
+    base.unpersist()
+  }
+
+  test("a batch past the hash-join bound merges through the sort-merge join, exactly") {
+    // one shuffle partition, so one partition holds the whole batch
+    val s1 = spark.newSession()
+    s1.conf.set("spark.sql.shuffle.partitions", "1")
+    val dir = tmpDir("graft-mor-big")
+    val table = Replay.createTable(s1, s"$dir/t", nBuckets = 1)
+    def batch(n: Long, lsnFrom: Long, op: String): DataFrame = s1.range(n).selectExpr(
+      "cast(id % 4 as int) as shard", s"id + $lsnFrom as lsn", s"'$op' as op",
+      "format_string('doc%08d', id) as doc_id", "array(cast(id % 1000 as int)) as tokens",
+      "1L as n_tok", "'wiki' as source", "cast(null as string) as lang")
+    val big = BatchApply.HashJoinMaxRows + 1000L
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => plans.add(x.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    def joinsOf(apply: => Unit): Seq[String] = {
+      plans.clear()
+      s1.sparkContext.addSparkListener(listener)
+      try { apply; Thread.sleep(1000) } // the listener bus is asynchronous
+      finally s1.sparkContext.removeSparkListener(listener)
+      Seq("SortMergeJoin", "ShuffledHashJoin").filter(j => plans.toArray.exists(_.toString.contains(j)))
+    }
+    BatchApply.apply(table, batch(big, 0L, "I"), batchId = 0)
+    assert(joinsOf(BatchApply.apply(table, batch(big, 1000000L, "U"), batchId = 1)) == Seq("SortMergeJoin"))
+    assert(joinsOf(BatchApply.apply(table, batch(10000L, 2000000L, "D"), batchId = 2)) ==
+      Seq("ShuffledHashJoin"))
+    val all = batch(big, 0L, "I").unionByName(batch(big, 1000000L, "U"))
+      .unionByName(batch(10000L, 2000000L, "D"))
+    val mism = Oracle.diff(Oracle.expectedState(s1, all), table.read())
+    assert(mism.isEmpty, mism.take(5).mkString("; "))
   }
 }
