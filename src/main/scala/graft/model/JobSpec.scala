@@ -69,6 +69,8 @@ final case class JobSpec(
     tableDir: String,
     checkpointDir: String,
     nBuckets: Int,
+    /** `writer.saltBuckets`: accepted for older specs; it no longer
+      * changes the plan ([[graft.apply.BatchApply.canonicalize]]). */
     saltBuckets: Int,
     maxFilesPerTrigger: Int,
     /** flow-control caps — the DataX channel byte/record limits
